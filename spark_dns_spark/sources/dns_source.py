@@ -32,6 +32,7 @@ partitions), plus a reference-parity progress log with
 from __future__ import annotations
 
 import json
+import logging
 import os
 from dataclasses import dataclass
 from datetime import datetime, timezone
@@ -56,6 +57,8 @@ from pyspark.sql.types import (
 from spark_dns_spark.sources.options import XFR_AXFR, DnsSourceOptions
 from spark_dns_spark.sources.transport import make_transport
 from spark_dns_spark.sources.zonestore import ZoneNotFoundError
+
+log = logging.getLogger(__name__)
 
 #: Read schema — 6 columns, alphabetical (bean-encoder order parity,
 #: DnsRecordToRowConverter.java:20, SURVEY.md §1.3).
@@ -105,8 +108,6 @@ def _transfer_rows(opts: DnsSourceOptions, part: DnsZonePartition):
     )
     transport = make_transport(opts)
     try:
-        if part.zone in opts.fail_zones:  # fault injection (tests, T7)
-            raise OSError(f"simulated transfer failure for {part.zone}")
         # port/timeout behave like the reference's TCP client: wrong
         # port refuses, simulated RTT beyond `timeout` times out — both
         # suppressable via ignore-failures (DnsZoneRDD.java:82-92).
@@ -119,10 +120,12 @@ def _transfer_rows(opts: DnsSourceOptions, part: DnsZonePartition):
         res = transport.transfer(
             part.zone, part.from_serial, part.to_serial, part.axfr
         )
-    except (OSError, ZoneNotFoundError):
-        if opts.ignore_failures:
-            return  # log+empty partition (DnsZoneRDD.java:86-91)
-        raise
+    except (OSError, ZoneNotFoundError) as e:
+        if not opts.ignore_failures:
+            raise
+        # log + empty partition (DnsZoneRDD.java:86-91)
+        log.warning("ignore-failures: zone %s read as empty: %r", part.zone, e)
+        return
     for action, fqdn, ip in res.rows:
         # column order = READ_SCHEMA order
         yield (action, fqdn.lower(), ip, opts.organization, ts, part.zone)
@@ -290,9 +293,13 @@ class DnsStreamReader(DataSourceStreamReader):
         for z in self._zones():
             try:
                 target = int(transport.serial(z))
-            except ZoneNotFoundError:
+            except ZoneNotFoundError as e:
                 if not self.opts.ignore_failures:
                     raise
+                log.warning(
+                    "ignore-failures: zone %s left out of this batch's "
+                    "offsets: %r", z, e,
+                )
                 continue
             if cap:
                 target = min(target, int(self._clock.get(z, 0)) + cap)

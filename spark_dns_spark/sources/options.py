@@ -43,7 +43,7 @@ def _get(options: dict, key: str, default=None):
 CONF_PREFIX = "spark.dns."
 CONF_KEYS = (
     "store", "server", "port", "timeout", "organization", "zones",
-    "xfr", "serial", "ignore-failures", "fail-zones",
+    "xfr", "serial", "ignore-failures",
     "max-kept-commits", "max-changes-per-batch", "transport",
 )
 
@@ -125,7 +125,6 @@ class DnsSourceOptions(DnsOptions):
     xfr: str = XFR_IXFR
     serial: int = 0
     ignore_failures: bool = False
-    fail_zones: list[str] = field(default_factory=list)  # test fault injection
     max_kept_commits: int = 10  # streaming progress retention (O2)
     #: Streaming admission control (kafka ``maxOffsetsPerTrigger``
     #: analog; the reference has no equivalent — a zone with a huge
@@ -133,8 +132,8 @@ class DnsSourceOptions(DnsOptions):
     #: per-zone serial advance of each micro-batch so a backlog drains
     #: across triggers.  0 = unlimited (reference behavior).
     max_changes_per_batch: int = 0
-    #: 'store' (file-backed simulator, default) or 'wire' (dnspython
-    #: against a live server — transport.py; needs dnspython installed).
+    #: 'store' (file-backed simulator, default) or 'wire' (a TCP zone
+    #: transfer from a live server — transport.py).
     transport: str = "store"
 
     @classmethod
@@ -158,11 +157,6 @@ class DnsSourceOptions(DnsOptions):
         if serial < 0:
             raise OptionError(f"invalid serial: {serial}")
         ignore = str(_get(options, "ignore-failures", "false")).lower() == "true"
-        fail_zones = [
-            z.strip()
-            for z in str(_get(options, "fail-zones", "")).split(",")
-            if z.strip()
-        ]
         kept = int(_get(options, "max-kept-commits", 10))
         if kept <= 0:
             raise OptionError(f"invalid max-kept-commits: {kept}")
@@ -180,7 +174,6 @@ class DnsSourceOptions(DnsOptions):
             xfr=xfr,
             serial=serial,
             ignore_failures=ignore,
-            fail_zones=fail_zones,
             max_kept_commits=kept,
             max_changes_per_batch=max_changes,
             transport=transport,

@@ -8,9 +8,9 @@ filters to A records, ``Xfr.java:76-81``).  This repo's default
 transport is the deterministic file-backed :class:`~spark_dns_spark.
 sources.zonestore.ZoneStore` (no live server in the harness —
 SURVEY.md §5); this module makes that choice explicit behind
-:class:`ZoneTransport` and adds :class:`WireTransport`, a
-dnspython-backed implementation of the same contract, so the engine can
-read a real zone wherever ``dnspython`` and a server exist.
+:class:`ZoneTransport` and adds :class:`WireTransport`, a stdlib TCP
+client of the same contract, so the engine can read a real zone from
+any server that allows zone transfers.
 
 Both transports honor the same contract, unit-tested in
 ``tests/test_transport.py``:
@@ -26,16 +26,30 @@ Both transports honor the same contract, unit-tested in
 
 ``WireTransport`` splits into a pure, fully-tested answer-stream parser
 (:func:`parse_xfr_stream` — RFC 5936/1995 record-stream shapes,
-dnsjava-handler detection parity) and a thin wire callable that is
-import-gated on ``dnspython`` (not present in this container) and
-injectable for tests.
+dnsjava-handler detection parity) and a TCP exchange on the package
+codec (:mod:`~spark_dns_spark.sources.dnswire`) that reads messages
+until the stream's terminating SOA.  Both the transfer and the SOA
+serial poll go over TCP, the port XFR needs anyway.
 """
 
 from __future__ import annotations
 
+import random
+import socket
 from abc import ABC, abstractmethod
-from collections.abc import Callable, Sequence
+from collections.abc import Callable, Iterator, Sequence
 
+from spark_dns_spark.sources.dnswire import (
+    OPCODE_QUERY,
+    RR,
+    Message,
+    decode_message,
+    encode_message,
+    raise_for_rcode,
+    recv_frame,
+    reply_rcode,
+    send_frame,
+)
 from spark_dns_spark.sources.zonestore import (
     AXFR,
     IXFR_ADD,
@@ -228,9 +242,9 @@ class WireTransport(ZoneTransport):
     answer's shape decide (AXFR fallback included); A-filter; timeout
     and port forwarded to the client.
 
-    ``wire`` / ``serial_wire`` are injectable for tests (this container
-    has no dnspython and no DNS server); by default they drive
-    ``dns.query.xfr`` / a UDP SOA query, import-gated at call time.
+    ``wire`` / ``serial_wire`` are injectable for tests; by default
+    they run :meth:`_tcp_xfr` / :meth:`_tcp_serial` against
+    ``server:port``.
     """
 
     def __init__(
@@ -244,8 +258,8 @@ class WireTransport(ZoneTransport):
         self.server = server
         self.port = port
         self.timeout = timeout
-        self._wire = wire or self._dnspython_wire
-        self._serial_wire = serial_wire or self._dnspython_serial
+        self._wire = wire or self._tcp_xfr
+        self._serial_wire = serial_wire or self._tcp_serial
 
     # -- contract ------------------------------------------------------
     def zones(self) -> list[str]:
@@ -284,54 +298,60 @@ class WireTransport(ZoneTransport):
     def check_connect(self, zone: str | None = None) -> None:
         pass  # connection errors surface on the transfer itself
 
-    # -- dnspython wire (import-gated; not exercised in this container) -
-    def _dnspython_wire(self, zone: str, serial: int) -> list[WireRR]:
-        try:
-            import dns.query  # noqa: PLC0415
-            import dns.rdatatype  # noqa: PLC0415
-        except ImportError as e:  # pragma: no cover - env without dnspython
-            raise OSError(
-                "WireTransport needs the 'dnspython' package (pip install "
-                "dnspython) or an injected wire= callable"
-            ) from e
-        out: list[WireRR] = []
-        # dns.query.xfr speaks TCP, honors port/timeout, and for
-        # rdtype=IXFR falls back exactly like dnsjava when the server
-        # answers AXFR-shaped (Xfr.java:40-42 parity).
-        for message in dns.query.xfr(
-            self.server,
-            zone,
-            rdtype=dns.rdatatype.IXFR,
-            serial=serial,
-            port=self.port,
-            timeout=self.timeout,
-            relativize=False,
-        ):
-            for rrset in message.answer:
-                rtype = dns.rdatatype.to_text(rrset.rdtype)
-                for rd in rrset:
-                    soa_serial = int(getattr(rd, "serial", 0))
-                    value = (
-                        str(getattr(rd, "address", rd.to_text()))
-                    )
-                    out.append((rtype, str(rrset.name), value, soa_serial))
-        return out
+    # -- TCP exchange ------------------------------------------------
+    def _replies(
+        self, zone: str, qtype: str, authority: Sequence[RR] = ()
+    ) -> Iterator[Message]:
+        """Send one query over a new TCP connection and yield its
+        replies, each checked for our id, the QR bit and rcode 0."""
+        mid = random.getrandbits(16)
+        query = Message(mid, 0, [(zone, qtype)], [], list(authority))
+        with socket.create_connection(
+            (self.server, self.port), timeout=self.timeout
+        ) as sock:
+            send_frame(sock, encode_message(query))
+            while True:
+                raw = recv_frame(sock)
+                rcode = reply_rcode(raw, mid, OPCODE_QUERY)
+                raise_for_rcode(rcode, f"{qtype} query", zone)
+                try:
+                    msg = decode_message(raw)
+                except ValueError as e:
+                    raise OSError(
+                        f"undecodable {qtype} reply for {zone}: {e}"
+                    ) from e
+                yield msg
 
-    def _dnspython_serial(self, zone: str) -> int:  # pragma: no cover
-        try:
-            import dns.message  # noqa: PLC0415
-            import dns.query  # noqa: PLC0415
-            import dns.rdatatype  # noqa: PLC0415
-        except ImportError as e:
-            raise OSError(
-                "WireTransport needs the 'dnspython' package (pip install "
-                "dnspython) or an injected serial_wire= callable"
-            ) from e
-        q = dns.message.make_query(zone, dns.rdatatype.SOA)
-        resp = dns.query.udp(q, self.server, port=self.port, timeout=self.timeout)
-        for rrset in resp.answer:
-            if rrset.rdtype == dns.rdatatype.SOA:
-                return int(next(iter(rrset)).serial)
+    def _tcp_xfr(self, zone: str, serial: int) -> list[WireRR]:
+        """IXFR(serial) over TCP, folding the answer across messages
+        until the stream's terminator (RFC 1995 §4 / RFC 5936 §2.2):
+        a SOA repeating the leading serial that closes an odd number of
+        SOAs after the first — AXFR has one, IXFR one per delimiter
+        pair plus one — or, for a request already up to date, the
+        leading SOA alone.  The server may keep the connection open
+        afterwards; closing it earlier is a truncated answer."""
+        # RFC 1995 §3: the client's serial rides in the authority SOA
+        known = RR("SOA", zone, f". . {serial} 0 0 0 0", serial)
+        rrs: list[WireRR] = []
+        soas = 0
+        # returning drops the generator, which closes the connection
+        replies = self._replies(zone, "IXFR", [known])
+        while True:
+            for rr in next(replies).answer:
+                soas += bool(rrs) and rr.rtype == "SOA"
+                rrs.append(rr[:4])
+            if not rrs or rrs[0][0] != "SOA":
+                return rrs  # parse_xfr_stream names the fault
+            final, last = rrs[0][3], rrs[-1]
+            if (len(rrs) == 1 and final <= serial) or (
+                soas % 2 and last[0] == "SOA" and last[3] == final
+            ):
+                return rrs
+
+    def _tcp_serial(self, zone: str) -> int:
+        for rr in next(self._replies(zone, "SOA")).answer:
+            if rr.rtype == "SOA":
+                return rr.serial
         raise ZoneNotFoundError(f"no SOA answer for {zone}")
 
 

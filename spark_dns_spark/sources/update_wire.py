@@ -7,9 +7,8 @@ resolving every written fqdn against the live server
 (``DnsSinkRelationProviderTest.java:182-197``).  This module is the
 Python/stdlib equivalent: an UPDATE message encoder (RFC 2136 §2) and
 a length-framed TCP send (RFC 1035 §4.2.2) that raises on any
-non-zero response code — no dnspython required, because UPDATE
-encoding is small and the sink should not drag an optional dependency
-into the executor hot path.
+non-zero response code, both on the package codec
+(:mod:`~spark_dns_spark.sources.dnswire`).
 
 Change mapping (same action vocabulary as the file-backed
 :class:`~spark_dns_spark.sources.zonestore.ZoneStore` path):
@@ -31,64 +30,36 @@ an ``OSError`` (the reference throws on any send failure,
 from __future__ import annotations
 
 import socket
-import struct
 
-from spark_dns_spark.sources.zonestore import (
-    AXFR,
-    IXFR_ADD,
-    IXFR_DELETE,
-    ZoneNotFoundError,
+from spark_dns_spark.sources.dnswire import (
+    CLASS_IN,
+    CLASS_NONE,
+    MAX_MESSAGE,
+    OPCODE_UPDATE,
+    RR,
+    Message,
+    encode_message,
+    encode_name,
+    encode_rr,
+    raise_for_rcode,
+    recv_frame,
+    reply_rcode,
+    send_frame,
 )
-
-OPCODE_UPDATE = 5
-TYPE_A = 1
-TYPE_SOA = 6
-CLASS_IN = 1
-CLASS_NONE = 254  # §2.5.4 delete-an-RR
-RCODE_NOTAUTH = 9
-
-RCODE_TEXT = {
-    0: "NOERROR", 1: "FORMERR", 2: "SERVFAIL", 3: "NXDOMAIN",
-    4: "NOTIMP", 5: "REFUSED", 6: "YXDOMAIN", 7: "YXRRSET",
-    8: "NXRRSET", 9: "NOTAUTH", 10: "NOTZONE",
-}
+from spark_dns_spark.sources.zonestore import AXFR, IXFR_ADD, IXFR_DELETE
 
 #: One update-section change: (action, absolute fqdn, ipv4 text, ttl).
 UpdateRR = tuple[str, str, str, int]
 
 
-def encode_name(name: str) -> bytes:
-    """Uncompressed RFC 1035 §3.1 name encoding (absolute)."""
-    out = b""
-    for label in name.rstrip(".").split("."):
-        if label:
-            lb = label.encode("ascii")
-            if len(lb) > 63:
-                raise ValueError(f"label too long: {label!r}")
-            out += bytes([len(lb)]) + lb
-    return out + b"\x00"
-
-
-#: RFC 1035 §4.2.2 frames a TCP DNS message with a 2-byte length — the
-#: whole message is hard-capped at 65535 bytes.
-MAX_MESSAGE = 0xFFFF
-
-
-def _encode_rr(change: UpdateRR) -> bytes:
+def _update_rr(change: UpdateRR) -> RR:
     """One Update-section RR (§2.5.1 add / §2.5.4 delete-an-RR)."""
     action, fqdn, ip, ttl = change
-    rdata = socket.inet_aton(ip)
     if action in (AXFR, IXFR_ADD):
-        klass, use_ttl = CLASS_IN, int(ttl)
-    elif action == IXFR_DELETE:
-        klass, use_ttl = CLASS_NONE, 0  # §2.5.4: TTL must be 0
-    else:
-        raise ValueError(f"unknown update action: {action}")
-    return (
-        encode_name(fqdn)
-        + struct.pack("!HHIH", TYPE_A, klass, use_ttl & 0xFFFFFFFF, 4)
-        + rdata
-    )
+        return RR("A", fqdn, ip, 0, CLASS_IN, int(ttl))
+    if action == IXFR_DELETE:
+        return RR("A", fqdn, ip, 0, CLASS_NONE, 0)  # §2.5.4: TTL 0
+    raise ValueError(f"unknown update action: {action}")
 
 
 def encode_update_message(
@@ -100,13 +71,12 @@ def encode_update_message(
     message cap — batch callers chunk via :func:`chunk_changes`."""
     if not (0 <= mid <= 0xFFFF):
         raise ValueError(f"invalid message id: {mid}")
-    header = struct.pack(
-        "!HHHHHH", mid, OPCODE_UPDATE << 11, 1, 0, len(changes), 0
+    wire = encode_message(
+        Message(
+            mid, OPCODE_UPDATE << 11, [(zone, "SOA")], [],
+            [_update_rr(c) for c in changes],
+        )
     )
-    body = encode_name(zone) + struct.pack("!HH", TYPE_SOA, CLASS_IN)
-    for change in changes:
-        body += _encode_rr(change)
-    wire = header + body
     if len(wire) > MAX_MESSAGE:
         raise ValueError(
             f"DNS UPDATE message for zone {zone} is {len(wire)} bytes "
@@ -131,7 +101,7 @@ def chunk_changes(
     cur: list[UpdateRR] = []
     used = 0
     for change in changes:
-        size = len(_encode_rr(change))
+        size = len(encode_rr(_update_rr(change)))
         if cur and used + size > budget:
             out.append(cur)
             cur, used = [], 0
@@ -144,30 +114,7 @@ def chunk_changes(
 
 def parse_update_response(buf: bytes, want_mid: int) -> int:
     """Validate a §3.8 response header; returns the rcode."""
-    if len(buf) < 12:
-        raise OSError("short DNS UPDATE response (truncated header)")
-    mid, flags = struct.unpack_from("!HH", buf, 0)
-    if mid != want_mid:
-        raise OSError(
-            f"DNS UPDATE response id mismatch: sent {want_mid}, got {mid}"
-        )
-    if not flags & 0x8000:
-        raise OSError("DNS UPDATE response missing QR bit")
-    if (flags >> 11) & 0xF != OPCODE_UPDATE:
-        raise OSError(
-            f"DNS UPDATE response has opcode {(flags >> 11) & 0xF}, want 5"
-        )
-    return flags & 0xF
-
-
-def _recv_exact(sock: socket.socket, n: int) -> bytes:
-    buf = b""
-    while len(buf) < n:
-        chunk = sock.recv(n - len(buf))
-        if not chunk:
-            raise OSError("connection closed mid DNS UPDATE response")
-        buf += chunk
-    return buf
+    return reply_rcode(buf, want_mid, OPCODE_UPDATE)
 
 
 def send_update(
@@ -197,22 +144,8 @@ def send_update(
             mid = (
                 sum(zone.encode("ascii")) * 131 + len(chunk) + 257 * idx
             ) & 0xFFFF
-            wire = encode_update_message(zone, chunk, mid=mid)
-            s.sendall(len(wire).to_bytes(2, "big") + wire)
-            raw = _recv_exact(s, int.from_bytes(_recv_exact(s, 2), "big"))
-            rcode = parse_update_response(raw, mid)
-            if rcode == RCODE_NOTAUTH:
-                # not authoritative for the zone == the file store's
-                # unknown zone: keep ignore-failures semantics
-                # transport-independent
-                raise ZoneNotFoundError(
-                    "DNS UPDATE refused: server not authoritative for "
-                    f"{zone}"
-                )
-            if rcode != 0:
-                # reference behavior: any non-NOERROR response is a
-                # hard failure (DnsUpdate.java:76-80)
-                raise OSError(
-                    "DNS UPDATE failed: rcode="
-                    f"{RCODE_TEXT.get(rcode, rcode)} for zone {zone}"
-                )
+            send_frame(s, encode_update_message(zone, chunk, mid=mid))
+            rcode = parse_update_response(recv_frame(s), mid)
+            # reference behavior: any non-NOERROR response is a hard
+            # failure (DnsUpdate.java:76-80); NOTAUTH is the unknown zone
+            raise_for_rcode(rcode, "DNS UPDATE", zone)

@@ -1,452 +1,227 @@
-"""Pure-stdlib DNS wire codec + loopback server + a ``dns``-shaped shim
-that does REAL socket I/O — test support closing VERDICT-r6 item 5.
-
-The reference's whole test strategy is a live Bind9 container
-(``src/test/java/com/acme/dns/spark/BindContainerFactory.java:21-22``);
-this container has neither Bind nor dnspython, so the socket layer of
-``WireTransport`` was previously only reachable through in-memory
-fakes.  This module provides the missing piece with stdlib only:
-
-- an RFC 1035 §4 message codec (header, question, RR sections; name
-  compression pointers are FOLLOWED on decode, emitted never) covering
-  the record types the connector models (SOA / A / NS / IXFR / AXFR);
-- :class:`LoopbackDnsServer`: a 127.0.0.1 TCP server speaking RFC 1035
-  §4.2.2 two-byte length framing whose XFR answers can span multiple
-  messages (RFC 5936 §2 multi-message responses), plus a UDP socket
-  answering SOA serial polls;
-- :func:`install_socket_shim`: a minimal ``dns`` package surface
-  (``dns.query.xfr`` / ``dns.query.udp`` / ``dns.message.make_query``
-  / ``dns.rdatatype``) whose transport is genuine ``socket`` I/O — so
-  ``WireTransport._dnspython_wire`` / ``_dnspython_serial`` run their
-  real adapter code end-to-end over real TCP/UDP.
-
-Scope note: this is deliberately a TEST codec — uncompressed name
-emission, IN class only, no EDNS — enough to speak the XFR subset the
-transport uses, not a general DNS implementation.
+"""A 127.0.0.1 DNS server on the package codec — the wire-transport
+tests' stand-in for the reference's live Bind9 container
+(``src/test/java/com/acme/dns/spark/BindContainerFactory.java:21-22``).
+Like an RFC 7766 server it keeps each connection open until the client
+closes it, so a client only finishes a transfer by spotting the
+terminating SOA.
 """
 
 from __future__ import annotations
 
 import socket
-import struct
 import threading
-import types
 from typing import Callable, Sequence
 
-QTYPE = {"A": 1, "NS": 2, "SOA": 6, "IXFR": 251, "AXFR": 252}
-QTYPE_TEXT = {v: k for k, v in QTYPE.items()}
+from spark_dns_spark.sources.dnswire import (
+    CLASS_IN,
+    CLASS_NONE,
+    FLAG_QR,
+    OPCODE_UPDATE,
+    RCODE_NOTAUTH,
+    RR,
+    Message,
+    decode_message,
+    encode_message,
+    recv_frame,
+    send_frame,
+)
+from spark_dns_spark.sources.transport import WireRR
+from spark_dns_spark.sources.zonestore import (
+    IXFR_ADD,
+    IXFR_DELETE,
+    ZoneNotFoundError,
+    ZoneStore,
+)
 
-#: WireRR shape shared with spark_dns_spark.sources.transport:
-#: (rtype_text, absolute_name, value, soa_serial)
-WireRR = tuple[str, str, str, int]
-
-
-# ---------------------------------------------------------------- names
-def encode_name(name: str) -> bytes:
-    out = b""
-    for label in name.rstrip(".").split("."):
-        if label:
-            lb = label.encode("ascii")
-            out += bytes([len(lb)]) + lb
-    return out + b"\x00"
-
-
-def decode_name(buf: bytes, off: int) -> tuple[str, int]:
-    """Decode a (possibly pointer-compressed) name; returns
-    (absolute name with trailing dot, offset after the name)."""
-    labels: list[str] = []
-    end = -1
-    seen: set[int] = set()
-    while True:
-        if off in seen:
-            raise ValueError("DNS name compression loop")
-        seen.add(off)
-        ln = buf[off]
-        if ln == 0:
-            if end < 0:
-                end = off + 1
-            break
-        if ln & 0xC0 == 0xC0:  # compression pointer
-            if end < 0:
-                end = off + 2
-            off = ((ln & 0x3F) << 8) | buf[off + 1]
-            continue
-        labels.append(buf[off + 1 : off + 1 + ln].decode("ascii"))
-        off += 1 + ln
-    return ".".join(labels) + ".", end
-
-
-# ------------------------------------------------------------- messages
-def _soa_rdata(zone: str, serial: int) -> bytes:
-    return (
-        encode_name(f"ns1.{zone}")
-        + encode_name(f"host.{zone}")
-        + struct.pack("!IIIII", serial, 1, 1, 1, 1)
-    )
-
-
-def encode_rr(rtype: str, name: str, value: str, serial: int, zone: str) -> bytes:
-    if rtype == "SOA":
-        rdata = _soa_rdata(zone, serial)
-    elif rtype == "A":
-        rdata = socket.inet_aton(value)
-    elif rtype in ("NS",):
-        rdata = encode_name(value)
-    else:
-        raise ValueError(f"unsupported test rtype {rtype}")
-    return (
-        encode_name(name)
-        + struct.pack("!HHIH", QTYPE[rtype], 1, 300, len(rdata))
-        + rdata
-    )
-
-
-def build_query(
-    zone: str, qtype: str, serial: int | None = None, mid: int = 0x1234
-) -> bytes:
-    """A query message; for IXFR the client's known serial rides in the
-    authority section's SOA (RFC 1995 §3)."""
-    authority = b""
-    ancount = 0
-    if qtype == "IXFR" and serial is not None:
-        authority = encode_rr("SOA", zone, "", serial, zone)
-        ancount = 1
-    header = struct.pack("!HHHHHH", mid, 0x0000, 1, 0, ancount, 0)
-    question = encode_name(zone) + struct.pack("!HH", QTYPE[qtype], 1)
-    return header + question + authority
-
-
-def build_response(
-    mid: int, zone: str, qtype: str, rrs: Sequence[WireRR]
-) -> bytes:
-    """A response message carrying ``rrs`` in the answer section,
-    echoing the query's id and question."""
-    header = struct.pack("!HHHHHH", mid, 0x8400, 1, len(rrs), 0, 0)
-    body = encode_name(zone) + struct.pack("!HH", QTYPE[qtype], 1)
-    for rtype, name, value, soa_serial in rrs:
-        body += encode_rr(rtype, name, value, soa_serial, zone)
-    return header + body
-
-
-class ParsedMessage:
-    def __init__(self, mid: int, qname: str, qtype: str,
-                 answers: list[WireRR], authority: list[WireRR]):
-        self.mid = mid
-        self.qname = qname
-        self.qtype = qtype
-        self.answers = answers
-        self.authority = authority
-
-
-def _decode_rr(buf: bytes, off: int) -> tuple[WireRR, int]:
-    name, off = decode_name(buf, off)
-    rtype_n, _cls, _ttl, rdlen = struct.unpack_from("!HHIH", buf, off)
-    off += 10
-    rdata = buf[off : off + rdlen]
-    rtype = QTYPE_TEXT.get(rtype_n, str(rtype_n))
-    serial = 0
-    if rtype == "SOA":
-        mname, p = decode_name(buf, off)
-        rname, p = decode_name(buf, p)
-        serial = struct.unpack_from("!I", buf, p)[0]
-        value = f"{mname} {rname} {serial} 1 1 1 1"
-    elif rtype == "A":
-        value = socket.inet_ntoa(rdata)
-    elif rtype == "NS":
-        value, _ = decode_name(buf, off)
-    else:
-        value = rdata.hex()
-    return (rtype, name, value, serial), off + rdlen
-
-
-def parse_message(buf: bytes) -> ParsedMessage:
-    mid, _flags, qd, an, ns, _ar = struct.unpack_from("!HHHHHH", buf, 0)
-    off = 12
-    qname, qtype = "", ""
-    for _ in range(qd):
-        qname, off = decode_name(buf, off)
-        qt, _qc = struct.unpack_from("!HH", buf, off)
-        qtype = QTYPE_TEXT.get(qt, str(qt))
-        off += 4
-    answers: list[WireRR] = []
-    for _ in range(an):
-        rr, off = _decode_rr(buf, off)
-        answers.append(rr)
-    authority: list[WireRR] = []
-    for _ in range(ns):
-        rr, off = _decode_rr(buf, off)
-        authority.append(rr)
-    return ParsedMessage(mid, qname, qtype, answers, authority)
-
-
-# ------------------------------------------------- RFC 2136 UPDATE side
-OPCODE_UPDATE = 5
-CLASS_IN = 1
-CLASS_NONE = 254
-RCODE_NOTAUTH = 9
-
-#: decoded update-section change: (action, fqdn, ip, ttl) using the
-#: connector's action vocabulary (AXFR-add vs IXFR_DELETE is the
-#: sender's distinction; on the wire both adds are class IN, so the
-#: server decodes adds as "add").
+#: decoded update-section change: (action, fqdn, ip, ttl), where action
+#: is "add" (class IN) or "delete" (class NONE, RFC 2136 §2.5.4)
 UpdateChange = tuple[str, str, str, int]
 
 
-def message_opcode(buf: bytes) -> int:
-    return (struct.unpack_from("!H", buf, 2)[0] >> 11) & 0xF
+def soa_rr(zone: str, serial: int) -> WireRR:
+    return ("SOA", zone, f"ns1.{zone} hostmaster.{zone} {serial} 1 1 1 1", serial)
 
 
 def parse_update_message(buf: bytes) -> tuple[int, str, list[UpdateChange]]:
-    """Decode an RFC 2136 §2 UPDATE request: (mid, zone, changes).
-    Header count fields map ZOCOUNT/PRCOUNT/UPCOUNT/ADCOUNT (§2.2)."""
-    mid, flags, zo, pr, up, _ad = struct.unpack_from("!HHHHHH", buf, 0)
-    if (flags >> 11) & 0xF != OPCODE_UPDATE:
+    """Decode an RFC 2136 §2 UPDATE request: (mid, zone, changes).  The
+    zone / prerequisite / update sections arrive as the question,
+    answer and authority sections (§2.2); prerequisites are ignored."""
+    msg = decode_message(buf)
+    if (msg.flags >> 11) & 0xF != OPCODE_UPDATE:
         raise ValueError("not an UPDATE message")
-    off = 12
-    zone = ""
-    for _ in range(zo):
-        zone, off = decode_name(buf, off)
-        off += 4  # ztype + zclass
-    for _ in range(pr):  # prerequisites: skip RRs
-        _, off = decode_name(buf, off)
-        rdlen = struct.unpack_from("!H", buf, off + 8)[0]
-        off += 10 + rdlen
     changes: list[UpdateChange] = []
-    for _ in range(up):
-        name, off = decode_name(buf, off)
-        rtype, klass, ttl, rdlen = struct.unpack_from("!HHIH", buf, off)
-        off += 10
-        rdata = buf[off : off + rdlen]
-        off += rdlen
-        if rtype != QTYPE["A"]:
-            raise ValueError(f"test server only models A updates, got {rtype}")
-        ip = socket.inet_ntoa(rdata)
-        if klass == CLASS_IN:
-            changes.append(("add", name, ip, ttl))
-        elif klass == CLASS_NONE:  # §2.5.4 delete-an-RR (TTL must be 0)
-            if ttl != 0:
+    for rr in msg.authority:
+        if rr.rtype != "A":
+            raise ValueError(f"test server only models A updates, got {rr.rtype}")
+        if rr.rclass == CLASS_IN:
+            changes.append(("add", rr.name, rr.value, rr.ttl))
+        elif rr.rclass == CLASS_NONE:  # §2.5.4 delete-an-RR (TTL must be 0)
+            if rr.ttl != 0:
                 raise ValueError("delete-an-RR with non-zero TTL")
-            changes.append(("delete", name, ip, 0))
+            changes.append(("delete", rr.name, rr.value, 0))
         else:
-            raise ValueError(f"unsupported update class {klass}")
-    return mid, zone, changes
+            raise ValueError(f"unsupported update class {rr.rclass}")
+    return msg.mid, msg.question[0][0], changes
 
 
-def build_update_response(mid: int, zone: str, rcode: int) -> bytes:
-    """§3.8 response: header echoing id/opcode with QR set + rcode,
-    zone section echoed."""
-    flags = 0x8000 | (OPCODE_UPDATE << 11) | (rcode & 0xF)
-    header = struct.pack("!HHHHHH", mid, flags, 1, 0, 0, 0)
-    return header + encode_name(zone) + struct.pack("!HH", QTYPE["SOA"], 1)
+def reply_message(
+    mid: int, opcode: int, zone: str, qtype: str, rcode: int = 0,
+    answer: Sequence[WireRR] = (),
+) -> bytes:
+    """An authoritative reply echoing the request's id, opcode and
+    question (an UPDATE's zone section is its question)."""
+    flags = FLAG_QR | (opcode << 11) | 0x0400 | rcode
+    rrs = [RR(*rr, CLASS_IN, 300) for rr in answer]
+    return encode_message(Message(mid, flags, [(zone, qtype)], rrs, []))
 
 
-# --------------------------------------------------------------- server
-def _recv_exact(conn: socket.socket, n: int) -> bytes | None:
-    buf = b""
-    while len(buf) < n:
-        chunk = conn.recv(n - len(buf))
-        if not chunk:
-            return None
-        buf += chunk
-    return buf
+def store_script(store: ZoneStore) -> Callable[[str, int], list[WireRR]]:
+    """The answer a live server gives an IXFR(serial) request for this
+    store's state: a single SOA when up to date, per-version delete/add
+    runs while the journal covers the gap, else the AXFR-shaped zone
+    (NS record included).  Unknown zones raise ZoneNotFoundError."""
+
+    def script(zone: str, serial: int) -> list[WireRR]:
+        d = store._load(zone)
+        cur = int(d["serial"])
+        if serial >= cur:
+            return [soa_rr(zone, cur)]
+        have = {int(h[0]) for h in d["history"]}
+        journal_ok = all(s in have for s in range(serial + 1, cur + 1))
+        if serial == 0 or serial < int(d.get("base_serial", 0)) or not journal_ok:
+            body = [("A", f, ip, 0) for f, ip in d["records"]]
+            ns = ("NS", zone, f"ns1.{zone}", 0)
+            return [soa_rr(zone, cur), ns, *body, soa_rr(zone, cur)]
+        out = [soa_rr(zone, cur)]
+        for s in range(serial + 1, cur + 1):
+            chg = [h for h in d["history"] if int(h[0]) == s]
+            out.append(soa_rr(zone, s - 1))
+            out.extend(("A", h[2], h[3], 0) for h in chg if h[1] == IXFR_DELETE)
+            out.append(soa_rr(zone, s))
+            out.extend(("A", h[2], h[3], 0) for h in chg if h[1] != IXFR_DELETE)
+        out.append(soa_rr(zone, cur))
+        return out
+
+    return script
 
 
 class LoopbackDnsServer:
-    """127.0.0.1 XFR server: TCP with RFC 1035 §4.2.2 framing (answers
-    split across ``split`` messages per RFC 5936 §2), UDP SOA polls.
+    """127.0.0.1 TCP DNS server.
 
-    ``script(zone, req_serial) -> list[WireRR]`` supplies the transfer
-    answer; requests observed are recorded in ``self.requests``.
+    - IXFR/AXFR: ``script(zone, req_serial) -> list[WireRR]`` supplies
+      the answer, split across ``split`` messages (RFC 5936 §2);
+    - SOA: answered with ``serial(zone)``;
+    - UPDATE: ``update_handler(zone, changes) -> rcode``; no handler
+      answers NOTIMP.
 
-    RFC 2136 UPDATE requests (opcode 5) are dispatched to
-    ``update_handler(zone, changes) -> rcode`` — typically a closure
-    over a :class:`ZoneStore` so the server's state is resolvable by
-    the same oracle the reference's sink tests use
-    (DnsSinkRelationProviderTest.java:182-197).  No handler ⇒ NOTIMP.
+    A callable raising ZoneNotFoundError answers NOTAUTH.  ``fault``
+    corrupts every reply: ``"bad-id"`` flips the message id,
+    ``"undecodable"`` cuts the body short behind a valid header,
+    ``"short-frame"`` promises 100 bytes more than it sends and hangs
+    up, ``"hangup"`` closes right after the answer, ``"silent"`` never
+    answers.  Requests are
+    recorded in ``self.requests``; an UPDATE's raw message is kept
+    under ``"wire"``.
     """
 
     def __init__(
         self,
-        script: Callable[[str, int], Sequence[WireRR]],
-        soa_serial: int = 0,
-        split: int = 2,
+        script: Callable[[str, int], Sequence[WireRR]] | None = None,
+        serial: Callable[[str], int] | None = None,
         update_handler: Callable[[str, list[UpdateChange]], int] | None = None,
+        split: int = 2,
+        fault: str | None = None,
     ):
         self.script = script
-        self.soa_serial = soa_serial
+        self.serial = serial
         self.update_handler = update_handler
         self.split = max(1, split)
+        self.fault = fault
         self.requests: list[dict] = []
         self._tcp = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
         self._tcp.bind(("127.0.0.1", 0))
-        self._tcp.listen(32)  # Spark writes partitions concurrently
-        self._udp = socket.socket(socket.AF_INET, socket.SOCK_DGRAM)
-        self._udp.bind(("127.0.0.1", self._tcp.getsockname()[1]))
+        self._tcp.listen(32)  # Spark reads and writes partitions concurrently
         self.port = self._tcp.getsockname()[1]
-        self._threads = [
-            threading.Thread(target=self._serve_tcp, daemon=True),
-            threading.Thread(target=self._serve_udp, daemon=True),
-        ]
-        for t in self._threads:
-            t.start()
+        threading.Thread(target=self._serve, daemon=True).start()
 
-    def _serve_tcp(self) -> None:
+    @classmethod
+    def for_store(cls, store: ZoneStore, **kw) -> "LoopbackDnsServer":
+        """Serve ``store``: transfers and SOA polls read it, UPDATEs
+        apply to it, and zones it lacks answer NOTAUTH."""
+
+        def update(zone: str, changes: list[UpdateChange]) -> int:
+            if zone not in store.zones():
+                return RCODE_NOTAUTH
+            store.apply_update(zone, [
+                (IXFR_ADD if action == "add" else IXFR_DELETE, fqdn, ip)
+                for action, fqdn, ip, _ttl in changes
+            ])
+            return 0
+
+        return cls(store_script(store), store.serial, update, **kw)
+
+    def _serve(self) -> None:
         while True:
             try:
                 conn, _ = self._tcp.accept()
             except OSError:
                 return  # closed
-            # one thread per connection: executor partitions connect
-            # concurrently (ZoneStore mutation stays safe via flock)
             threading.Thread(
-                target=self._handle_tcp, args=(conn,), daemon=True
+                target=self._handle, args=(conn,), daemon=True
             ).start()
 
-    def _handle_tcp(self, conn: socket.socket) -> None:
+    def _handle(self, conn: socket.socket) -> None:
+        """Answer queries on one connection until the client closes it."""
         with conn:
-            hdr = _recv_exact(conn, 2)
-            if hdr is None:
-                return
-            raw = _recv_exact(conn, int.from_bytes(hdr, "big"))
-            if raw is None:
-                return
-            while message_opcode(raw) == OPCODE_UPDATE:
-                # RFC 7766: a client may send several messages on one
-                # connection — the chunked >64KB update path does (one
-                # UPDATE per 64KB frame, strictly request->response)
-                mid, zone, changes = parse_update_message(raw)
-                self.requests.append(
-                    {"qname": zone, "qtype": "UPDATE",
-                     "changes": list(changes)}
-                )
-                rcode = (
-                    self.update_handler(zone, changes)
-                    if self.update_handler is not None
-                    else 4  # NOTIMP
-                )
-                wire = build_update_response(mid, zone, rcode)
-                conn.sendall(len(wire).to_bytes(2, "big") + wire)
-                hdr = _recv_exact(conn, 2)
-                if hdr is None:
+            while True:
+                try:
+                    raw = recv_frame(conn)
+                except OSError:
                     return  # client done
-                raw = _recv_exact(conn, int.from_bytes(hdr, "big"))
-                if raw is None:
+                if self.fault == "silent":
+                    continue
+                for wire in self._answer(raw):
+                    if self.fault == "bad-id":
+                        wire = bytes([wire[0] ^ 0xFF]) + wire[1:]
+                    elif self.fault == "undecodable":
+                        wire = wire[:-3]
+                    elif self.fault == "short-frame":
+                        conn.sendall((len(wire) + 100).to_bytes(2, "big") + wire)
+                        return
+                    send_frame(conn, wire)
+                if self.fault == "hangup":
                     return
-            q = parse_message(raw)
-            req_serial = q.authority[0][3] if q.authority else 0
-            self.requests.append(
-                {"qname": q.qname, "qtype": q.qtype, "serial": req_serial}
-            )
-            rrs = list(self.script(q.qname, req_serial))
-            # RFC 5936 §2: a transfer legitimately spans messages —
-            # split so the client MUST fold across messages.
-            per = max(1, (len(rrs) + self.split - 1) // self.split)
-            for i in range(0, len(rrs), per):
-                wire = build_response(
-                    q.mid, q.qname, q.qtype, rrs[i : i + per]
-                )
-                conn.sendall(len(wire).to_bytes(2, "big") + wire)
-                # connection close marks end-of-transfer for the shim
 
-    def _serve_udp(self) -> None:
-        while True:
-            try:
-                raw, addr = self._udp.recvfrom(4096)
-            except OSError:
-                return  # closed
-            q = parse_message(raw)
+    def _answer(self, raw: bytes) -> list[bytes]:
+        opcode = (raw[2] >> 3) & 0xF
+        if opcode == OPCODE_UPDATE:
+            mid, zone, changes = parse_update_message(raw)
             self.requests.append(
-                {"qname": q.qname, "qtype": q.qtype, "proto": "udp"}
+                {"qname": zone, "qtype": "UPDATE", "changes": changes, "wire": raw}
             )
-            wire = build_response(
-                q.mid, q.qname, q.qtype,
-                [("SOA", q.qname, "", self.soa_serial)],
-            )
-            self._udp.sendto(wire, addr)
+            rcode = 4  # NOTIMP
+            if self.update_handler is not None:
+                rcode = self.update_handler(zone, changes)
+            return [reply_message(mid, opcode, zone, "SOA", rcode)]
+        q = decode_message(raw)
+        zone, qtype = q.question[0]
+        try:
+            if qtype == "SOA":
+                self.requests.append({"qname": zone, "qtype": qtype})
+                rrs = [soa_rr(zone, self.serial(zone))]
+                return [reply_message(q.mid, opcode, zone, qtype, answer=rrs)]
+            req_serial = q.authority[0].serial if q.authority else 0
+            self.requests.append({"qname": zone, "qtype": qtype, "serial": req_serial})
+            rrs = list(self.script(zone, req_serial))
+        except ZoneNotFoundError:
+            return [reply_message(q.mid, opcode, zone, qtype, RCODE_NOTAUTH)]
+        # RFC 5936 §2: a transfer legitimately spans messages — split
+        # so the client MUST fold across messages.
+        per = max(1, (len(rrs) + self.split - 1) // self.split)
+        return [
+            reply_message(q.mid, opcode, zone, qtype, answer=rrs[i : i + per])
+            for i in range(0, len(rrs), per)
+        ]
 
     def close(self) -> None:
         self._tcp.close()
-        self._udp.close()
-
-
-# ----------------------------------------------------------------- shim
-class _ShimRd:
-    def __init__(self, rr: WireRR):
-        rtype, _name, value, serial = rr
-        self._text = value
-        if rtype == "SOA":
-            self.serial = serial
-        if rtype == "A":
-            self.address = value
-
-    def to_text(self) -> str:
-        return self._text
-
-
-class _ShimRRset(list):
-    def __init__(self, rr: WireRR):
-        super().__init__([_ShimRd(rr)])
-        self.rdtype = QTYPE[rr[0]] if rr[0] in QTYPE else 0
-        self.name = rr[1]
-
-
-class _ShimMessage:
-    def __init__(self, answers: Sequence[WireRR]):
-        self.answer = [_ShimRRset(rr) for rr in answers]
-
-
-def install_socket_shim(monkeypatch) -> None:
-    """Install a ``dns`` package surface whose transport is REAL socket
-    I/O (stdlib), matching the exact attribute shape
-    ``WireTransport._dnspython_wire`` / ``_dnspython_serial`` touch."""
-    dns_mod = types.ModuleType("dns")
-    query_mod = types.ModuleType("dns.query")
-    rdatatype_mod = types.ModuleType("dns.rdatatype")
-    message_mod = types.ModuleType("dns.message")
-
-    rdatatype_mod.IXFR = QTYPE["IXFR"]
-    rdatatype_mod.AXFR = QTYPE["AXFR"]
-    rdatatype_mod.SOA = QTYPE["SOA"]
-    rdatatype_mod.A = QTYPE["A"]
-    rdatatype_mod.to_text = lambda v: QTYPE_TEXT[v]
-
-    def xfr(where, zone, rdtype=None, serial=None, port=None,
-            timeout=None, relativize=None, **kw):
-        qtype = QTYPE_TEXT.get(rdtype, "IXFR")
-        wire = build_query(str(zone), qtype, serial=serial)
-        with socket.create_connection(
-            (where, port or 53), timeout=timeout
-        ) as s:
-            s.sendall(len(wire).to_bytes(2, "big") + wire)
-            while True:
-                hdr = _recv_exact(s, 2)
-                if hdr is None:
-                    break  # server closed: end of transfer
-                raw = _recv_exact(s, int.from_bytes(hdr, "big"))
-                if raw is None:
-                    break
-                yield _ShimMessage(parse_message(raw).answers)
-
-    def make_query(zone, rdtype):
-        return build_query(str(zone), QTYPE_TEXT.get(rdtype, "SOA"))
-
-    def udp(q, where, port=None, timeout=None):
-        with socket.socket(socket.AF_INET, socket.SOCK_DGRAM) as s:
-            s.settimeout(timeout)
-            s.sendto(q, (where, port or 53))
-            raw, _ = s.recvfrom(4096)
-        return _ShimMessage(parse_message(raw).answers)
-
-    query_mod.xfr = xfr
-    query_mod.udp = udp
-    message_mod.make_query = make_query
-    dns_mod.query = query_mod
-    dns_mod.rdatatype = rdatatype_mod
-    dns_mod.message = message_mod
-    import sys
-
-    for name, mod in [
-        ("dns", dns_mod), ("dns.query", query_mod),
-        ("dns.rdatatype", rdatatype_mod), ("dns.message", message_mod),
-    ]:
-        monkeypatch.setitem(sys.modules, name, mod)

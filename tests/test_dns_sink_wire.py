@@ -6,10 +6,9 @@ TCP-sends it, requiring rcode==0 (``spark/write/DnsUpdate.java:46-81``),
 and its tests verify by RESOLVING every written fqdn against the live
 server (``DnsSinkRelationProviderTest.java:182-197``).  Here the live
 server is :class:`tests.dnswire.LoopbackDnsServer` (real 127.0.0.1 TCP,
-RFC 1035 §4.2.2 framing) whose UPDATE handler mutates a
-:class:`ZoneStore` — so ``store.resolve`` stays the oracle while every
-byte of the update travels over a genuine socket from the executor
-processes.
+RFC 1035 §4.2.2 framing) serving a :class:`ZoneStore` — so
+``store.resolve`` stays the oracle while every byte of the update
+travels over a genuine socket from the executor processes.
 """
 
 from __future__ import annotations
@@ -21,6 +20,7 @@ import pytest
 
 import tests.dnswire as dnswire
 from spark_dns_spark.sources import register_all
+from spark_dns_spark.sources.dnswire import OPCODE_UPDATE, decode_message
 from spark_dns_spark.sources.update_wire import (
     encode_update_message,
     parse_update_response,
@@ -39,7 +39,7 @@ def test_update_codec_roundtrip():
         ("IXFR_DELETE", "c.ex.test.", "10.0.0.3", 999),  # ttl forced to 0
     ]
     wire = encode_update_message("ex.test.", changes, mid=0xBEEF)
-    assert dnswire.message_opcode(wire) == dnswire.OPCODE_UPDATE
+    assert decode_message(wire).flags >> 11 == OPCODE_UPDATE
     mid, zone, decoded = dnswire.parse_update_message(wire)
     assert mid == 0xBEEF
     assert zone == "ex.test."
@@ -52,9 +52,9 @@ def test_update_codec_roundtrip():
 
 
 def test_update_response_rcode_and_id_check():
-    ok = dnswire.build_update_response(7, "ex.test.", 0)
+    ok = dnswire.reply_message(7, OPCODE_UPDATE, "ex.test.", "SOA")
     assert parse_update_response(ok, 7) == 0
-    refused = dnswire.build_update_response(7, "ex.test.", 5)
+    refused = dnswire.reply_message(7, OPCODE_UPDATE, "ex.test.", "SOA", 5)
     assert parse_update_response(refused, 7) == 5
     with pytest.raises(OSError, match="id mismatch"):
         parse_update_response(ok, 8)
@@ -70,22 +70,7 @@ def wire(tmp_path):
     server (DnsUpdateTest.java:60-75)."""
     zstore = ZoneStore(str(tmp_path / "zones"))
     zstore.create_zone("example.acme.", records=[], serial=1)
-
-    def handler(zone: str, changes) -> int:
-        if zone not in zstore.zones():
-            return dnswire.RCODE_NOTAUTH
-        zstore.apply_update(
-            zone,
-            [
-                ("IXFR_ADD" if action == "add" else "IXFR_DELETE", fqdn, ip)
-                for action, fqdn, ip, _ttl in changes
-            ],
-        )
-        return 0
-
-    server = dnswire.LoopbackDnsServer(
-        script=lambda zone, serial: [], update_handler=handler
-    )
+    server = dnswire.LoopbackDnsServer.for_store(zstore)
     try:
         yield server, zstore
     finally:
@@ -186,7 +171,7 @@ def test_wire_nonzero_rcode_raises(spark, tmp_path):
     # any non-NOERROR, non-NOTAUTH rcode is a hard failure regardless of
     # ignore-failures (DnsUpdate.java:76-80)
     server = dnswire.LoopbackDnsServer(
-        script=lambda z, s: [], update_handler=lambda z, c: 2  # SERVFAIL
+        update_handler=lambda z, c: 2  # SERVFAIL
     )
     try:
         register_all(spark)

@@ -9,6 +9,7 @@ import pytest
 
 from spark_dns_spark.sources import register_all
 from spark_dns_spark.sources.zonestore import ZoneStore
+from tests.dnswire import LoopbackDnsServer
 
 
 @pytest.fixture()
@@ -33,12 +34,25 @@ def store(tmp_path):
     return s
 
 
-def _read(spark, store, **opts):
+def _read(spark, zstore, **opts):
     register_all(spark)
-    reader = spark.read.format("dns").option("store", store.root)
+    reader = spark.read.format("dns").option("store", zstore.root)
     for k, v in opts.items():
         reader = reader.option(k.replace("_", "-"), str(v))
     return reader.load()
+
+
+@pytest.fixture()
+def wire(store):
+    """Options pointing a read at a loopback DNS server that serves
+    ``store`` over TCP (``transport=wire``), and that server."""
+    srv = LoopbackDnsServer.for_store(store)
+    yield {"store": "127.0.0.1", "transport": "wire", "port": srv.port}, srv
+    srv.close()
+
+
+def _rows(df):
+    return sorted((r.action, r.fqdn, r.ip, r.zone) for r in df.collect())
 
 
 def test_batch_axfr_read(spark, store):
@@ -53,6 +67,18 @@ def test_batch_axfr_read(spark, store):
     assert by_zone == {"example.acme.", "another.zone."}
     # per-zone constant timestamp (DnsZoneRDD.java:94)
     assert len({r.timestamp for r in rows}) == 1
+
+
+def test_wire_batch_axfr_read_matches_store(spark, store, wire):
+    opts, srv = wire
+    axfr = {"zones": "example.acme.,another.zone.", "xfr": "axfr"}
+    got = _rows(_read(spark, store, **opts, **axfr))
+    assert len(got) == 8 and {r[0] for r in got} == {"AXFR"}
+    assert got == _rows(_read(spark, store, **axfr))
+    # both zones went over TCP as IXFR(0) (Xfr.java:37-50 parity)
+    assert sorted((r["qname"], r["qtype"], r["serial"]) for r in srv.requests) == [
+        ("another.zone.", "IXFR", 0), ("example.acme.", "IXFR", 0),
+    ]
 
 
 def test_zones_default_to_all_served(spark, store):
@@ -76,6 +102,22 @@ def test_ixfr_delta_only(spark, store):
         ("IXFR_ADD", "new1.example.acme.", "192.168.1.50"),
         ("IXFR_DELETE", "workstation1.example.acme.", "192.168.1.1"),
     }
+
+
+def test_wire_ixfr_serial_read_matches_store(spark, store, wire):
+    opts, _ = wire
+    store.apply_update(
+        "example.acme.",
+        [("IXFR_ADD", "new1.example.acme.", "192.168.1.50"),
+         ("IXFR_DELETE", "workstation1.example.acme.", "192.168.1.1")],
+    )
+    ixfr = {"zones": "example.acme.", "xfr": "ixfr", "serial": 1}
+    got = _rows(_read(spark, store, **opts, **ixfr))
+    assert got == [
+        ("IXFR_ADD", "new1.example.acme.", "192.168.1.50", "example.acme."),
+        ("IXFR_DELETE", "workstation1.example.acme.", "192.168.1.1", "example.acme."),
+    ]
+    assert got == _rows(_read(spark, store, **ixfr))
 
 
 def test_ixfr_ancient_serial_falls_back_to_axfr(spark, store):
@@ -106,14 +148,33 @@ def test_unreachable_zone_ignore_failures_empty(spark, store):
     assert df.count() == 0
 
 
-def test_fail_zones_injection_matrix(spark, store):
-    df = _read(spark, store, zones="example.acme.,another.zone.",
-               xfr="axfr", fail_zones="example.acme.")
-    with pytest.raises(Exception, match="simulated transfer failure"):
-        df.collect()
-    df2 = _read(spark, store, zones="example.acme.,another.zone.",
-                xfr="axfr", fail_zones="example.acme.", ignore_failures="true")
-    assert df2.count() == 5  # failing zone suppressed, healthy zone intact
+def test_wire_notauth_fail_and_suppress(spark, store, wire):
+    # a server that is not authoritative for a zone answers NOTAUTH:
+    # same raise / suppress matrix as the store's unknown zone
+    opts, _ = wire
+    with pytest.raises(Exception, match="not authoritative"):
+        _read(spark, store, **opts, zones="nonexistent.zone.", xfr="axfr").collect()
+    df = _read(spark, store, **opts, zones="example.acme.,nonexistent.zone.",
+               xfr="axfr", ignore_failures="true")
+    assert df.count() == 3  # unknown zone empty, healthy zone intact
+
+
+def test_ignore_failures_logs_suppressed_zone(store, caplog):
+    """T7 suppression is never silent: the batch read and the stream's
+    offset poll each log a warning naming the zone and the exception."""
+    from spark_dns_spark.sources.dns_source import (
+        DnsStreamReader, DnsZonePartition, _transfer_rows,
+    )
+    from spark_dns_spark.sources.options import DnsSourceOptions
+
+    opts = {"store": store.root, "zones": "nonexistent.zone.", "ignore-failures": "true"}
+    part = DnsZonePartition("nonexistent.zone.", 0, None, True, 0)
+    with caplog.at_level("WARNING", logger="spark_dns_spark.sources.dns_source"):
+        assert list(_transfer_rows(DnsSourceOptions.parse(opts), part)) == []
+        assert DnsStreamReader(opts).latestOffset() == {}
+    msgs = [r.getMessage() for r in caplog.records]
+    assert len(msgs) == 2
+    assert all("nonexistent.zone." in m and "ZoneNotFoundError" in m for m in msgs)
 
 
 def test_sql_view_using_dns(spark, store):
@@ -151,11 +212,15 @@ def test_user_schema_is_rejected(spark, store):
 
 def test_zone_filter_pushdown_prunes_partitions(spark, store):
     # beyond-reference: EqualTo('zone') prunes before any transfer; a
-    # poisoned other-zone proves it never ran
+    # poisoned other-zone (simulated RTT past the timeout) proves it
+    # never ran
+    store.set_transfer_delay("another.zone.", 30.0)
     df = _read(spark, store, zones="example.acme.,another.zone.",
-               xfr="axfr", fail_zones="another.zone.")
+               xfr="axfr")
+    with pytest.raises(Exception, match="timed out"):
+        df.count()  # the poison bites when another.zone. is scanned
     good = df.filter(df.zone == "example.acme.")
-    assert good.count() == 3  # would raise if another.zone. were scanned
+    assert good.count() == 3
 
 
 def test_option_validation_errors(spark, store):

@@ -7,6 +7,8 @@ run → update → resume sequence).
 
 from __future__ import annotations
 
+import ast
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -14,6 +16,7 @@ from pyspark.sql import functions as F
 from spark_dns_spark.sources import register_all
 from spark_dns_spark.sources.dns_source import ProgressLog
 from spark_dns_spark.sources.zonestore import ZoneStore
+from tests.dnswire import LoopbackDnsServer
 
 
 @pytest.fixture()
@@ -36,22 +39,26 @@ def store(tmp_path):
     return s
 
 
-def _run_once(spark, store, out_dir, ckpt):
+def _run_once(spark, zstore, out_dir, ckpt, **opts):
+    """One availableNow run; ``opts`` add or override source options."""
     register_all(spark)
-    stream = (
+    reader = (
         spark.readStream.format("dns")
-        .option("store", store.root)
+        .option("store", zstore.root)
         .option("zones", "example.acme.")
-        .load()
     )
+    for k, v in opts.items():
+        reader = reader.option(k, str(v))
     q = (
-        stream.writeStream.format("parquet")
+        reader.load()
+        .writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120), "streaming query did not finish"
+    return q
 
 
 def test_stream_read_then_resume_exactly_once(spark, store, tmp_path):
@@ -107,6 +114,38 @@ def test_stream_sees_only_delta_not_snapshot(spark, store, tmp_path):
         spark.read.parquet(out).filter(F.col("fqdn") == "d1.example.acme.").collect()
     )
     assert len(new_rows) == 1 and new_rows[0].action == "IXFR_ADD"
+
+
+def test_stream_over_wire_offsets_from_tcp_soa_poll(spark, store, tmp_path):
+    """transport=wire: end offsets come from the SOA poll over TCP, the
+    first trigger snapshots the zone, the next reads only the delta."""
+    srv = LoopbackDnsServer.for_store(store)
+    progress = str(tmp_path / "progress")
+    wire = {"store": "127.0.0.1", "transport": "wire", "port": srv.port,
+            "progress-dir": progress}
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+
+    def end_offsets():
+        q = _run_once(spark, store, out, ckpt, **wire)
+        # the progress event carries the source's offset dict as text
+        return ast.literal_eval(q.lastProgress["sources"][0]["endOffset"])
+
+    try:
+        assert end_offsets() == {"example.acme.": 1}
+        assert spark.read.parquet(out).count() == 3
+        store.apply_update(
+            "example.acme.", [("IXFR_ADD", "d1.example.acme.", "10.1.1.1")]
+        )
+        assert end_offsets() == {"example.acme.": 2}
+    finally:
+        srv.close()
+    rows = spark.read.parquet(out).collect()
+    assert len(rows) == 4
+    assert [r.fqdn for r in rows if r.action == "IXFR_ADD"] == ["d1.example.acme."]
+    assert {"qname": "example.acme.", "qtype": "SOA"} in srv.requests
+    assert {"qname": "example.acme.", "qtype": "IXFR", "serial": 1} in srv.requests
+    # the first batch's commit reached the progress log
+    assert ProgressLog(progress, 10).latest() == {"example.acme.": 1}
 
 
 def test_progress_log_commit_and_retention(tmp_path):
@@ -168,17 +207,8 @@ def test_stream_zone_added_midstream(spark, store, tmp_path):
     """A zone appearing in the store after the stream starts is read
     from serial 0 (T2: new zones enter; removed zones warn+skip)."""
     out, ckpt = str(tmp_path / "o4"), str(tmp_path / "c4")
-    register_all(spark)
-    # no zones option ⇒ all served zones, re-listed per batch
-    stream = spark.readStream.format("dns").option("store", store.root).load()
-    q = (
-        stream.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+    # empty zones option ⇒ all served zones, re-listed per batch
+    _run_once(spark, store, out, ckpt, zones="")
     assert spark.read.parquet(out).count() == 3
 
     store.create_zone(
@@ -187,17 +217,7 @@ def test_stream_zone_added_midstream(spark, store, tmp_path):
         serial=1,
         history=[(1, "IXFR_ADD", "a.late.zone.", "7.7.7.7")],
     )
-    q = (
-        spark.readStream.format("dns")
-        .option("store", store.root)
-        .load()
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+    _run_once(spark, store, out, ckpt, zones="")
     got = spark.read.parquet(out)
     assert got.count() == 4
     assert got.filter(F.col("zone") == "late.zone.").count() == 1
@@ -220,30 +240,12 @@ def test_stream_backlog_drains_across_capped_batches(spark, store, tmp_path):
 
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
-    register_all(spark)
-
-    def run_once():
-        stream = (
-            spark.readStream.format("dns")
-            .option("store", store.root)
-            .option("zones", "example.acme.")
-            .option("max-changes-per-batch", "1")
-            .load()
-        )
-        q = (
-            stream.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(120), "streaming query did not finish"
 
     # drain: depending on whether availableNow loops micro-batches for
     # python sources, one run may advance one serial or all; loop runs
     # until the full backlog (3 initial + 4 adds) is out, bounded.
     for _ in range(8):
-        run_once()
+        _run_once(spark, store, out, ckpt, **{"max-changes-per-batch": 1})
         if spark.read.parquet(out).count() >= 7:
             break
     df = spark.read.parquet(out)

@@ -1,17 +1,27 @@
-"""Round-trip properties of the stdlib DNS wire codec (tests/dnswire.py)
-— no sockets here, pure encode/decode."""
+"""Round-trip properties of the package DNS wire codec
+(spark_dns_spark/sources/dnswire.py), plus one golden-bytes pin of the
+UPDATE messages ``send_update`` puts on the wire."""
 
 from __future__ import annotations
 
-import pytest
+import hashlib
 
-from tests.dnswire import (
-    build_query,
-    build_response,
+import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
+
+from spark_dns_spark.sources.dnswire import (
+    CLASS_IN,
+    RR,
+    Message,
+    decode_message,
     decode_name,
+    encode_message,
     encode_name,
-    parse_message,
+    encode_rr,
 )
+from spark_dns_spark.sources.update_wire import encode_update_message, send_update
+from tests.dnswire import LoopbackDnsServer, parse_update_message
 
 NAMES = ["example.acme.", "a.b.c.example.", "x.y.", "single."]
 
@@ -43,27 +53,113 @@ def test_pointer_loop_raises():
 
 
 def test_query_roundtrip_with_ixfr_serial():
-    wire = build_query("zone.example.", "IXFR", serial=42, mid=7)
-    m = parse_message(wire)
-    assert (m.mid, m.qname, m.qtype) == (7, "zone.example.", "IXFR")
-    assert m.authority[0][0] == "SOA" and m.authority[0][3] == 42
+    known = RR("SOA", "zone.example.", ". . 42 0 0 0 0", 42)
+    wire = encode_message(Message(7, 0, [("zone.example.", "IXFR")], [], [known]))
+    m = decode_message(wire)
+    assert (m.mid, m.question) == (7, [("zone.example.", "IXFR")])
+    assert m.authority[0].rtype == "SOA" and m.authority[0].serial == 42
 
 
 def test_response_roundtrip_all_rtypes():
     rrs = [
-        ("SOA", "z.example.", "", 5),
-        ("A", "a.z.example.", "10.1.2.3", 0),
-        ("NS", "z.example.", "ns1.z.example.", 0),
+        RR("SOA", "z.example.", "ns1.z.example. host.z.example. 5 1 1 1 1", 5),
+        RR("A", "a.z.example.", "10.1.2.3"),
+        RR("NS", "z.example.", "ns1.z.example."),
     ]
-    wire = build_response(9, "z.example.", "AXFR", rrs)
-    m = parse_message(wire)
-    assert m.mid == 9 and m.qtype == "AXFR"
-    got = [(r[0], r[1]) for r in m.answers]
-    assert got == [
-        ("SOA", "z.example."),
-        ("A", "a.z.example."),
-        ("NS", "z.example."),
-    ]
-    assert m.answers[0][3] == 5  # SOA serial survives
-    assert m.answers[1][2] == "10.1.2.3"  # A address survives
-    assert m.answers[2][2] == "ns1.z.example."  # NS target survives
+    wire = encode_message(Message(9, 0x8400, [("z.example.", "AXFR")], rrs, []))
+    m = decode_message(wire)
+    assert m.mid == 9 and m.question == [("z.example.", "AXFR")]
+    assert m.answer == rrs  # SOA serial, A address and NS target survive
+
+
+# ---------------------------------------------------- hypothesis trips
+_LABEL = st.text("abcdefghijklmnopqrstuvwxyz0123456789-", min_size=1, max_size=63)
+# labels of 1–63 bytes, at most 255 wire bytes including length octets
+_NAME = st.lists(_LABEL, min_size=1, max_size=8).filter(
+    lambda ls: sum(len(x) + 1 for x in ls) + 1 <= 255
+).map(lambda ls: ".".join(ls) + ".")
+_IP = st.tuples(*[st.integers(0, 255)] * 4).map(lambda t: ".".join(map(str, t)))
+_U32 = st.integers(0, 2**32 - 1)
+
+
+@st.composite
+def _rrs(draw):
+    kind = draw(st.sampled_from(["A", "NS", "SOA"]))
+    name, ttl = draw(_NAME), draw(_U32)
+    if kind == "A":
+        return RR("A", name, draw(_IP), 0, CLASS_IN, ttl)
+    if kind == "NS":
+        return RR("NS", name, draw(_NAME), 0, CLASS_IN, ttl)
+    serial, *timers = draw(st.lists(_U32, min_size=5, max_size=5))
+    value = " ".join([draw(_NAME), draw(_NAME), str(serial), *map(str, timers)])
+    return RR("SOA", name, value, serial, CLASS_IN, ttl)
+
+
+@settings(max_examples=200, deadline=None)
+@given(_NAME)
+def test_name_roundtrip_property(name):
+    buf = encode_name(name)
+    assert len(buf) <= 255
+    assert decode_name(buf, 0) == (name, len(buf))
+
+
+def test_name_over_255_bytes_rejected():
+    name = ".".join(["a" * 63] * 4) + "."  # 4 * 64 + 1 = 257 bytes
+    with pytest.raises(ValueError, match="255"):
+        encode_name(name)
+    with pytest.raises(ValueError, match="255"):
+        decode_name(b"".join(bytes([63]) + b"a" * 63 for _ in range(4)) + b"\0", 0)
+
+
+@settings(max_examples=200, deadline=None)
+@given(_rrs())
+def test_rr_roundtrip_property(rr):
+    wire = encode_message(Message(1, 0x8000, [], [rr], []))
+    assert decode_message(wire).answer == [rr]
+    assert len(wire) == 12 + len(encode_rr(rr))
+
+
+_CHANGE = st.tuples(
+    st.sampled_from(["IXFR_ADD", "AXFR", "IXFR_DELETE"]), _NAME, _IP, _U32
+)
+
+
+@settings(max_examples=100, deadline=None)
+@given(_NAME, st.lists(_CHANGE, max_size=40), st.integers(0, 0xFFFF))
+def test_update_message_roundtrip_property(zone, changes, mid):
+    wire = encode_update_message(zone, changes, mid=mid)
+    assert parse_update_message(wire) == (
+        mid,
+        zone,
+        [
+            ("delete", n, ip, 0) if a == "IXFR_DELETE" else ("add", n, ip, ttl)
+            for a, n, ip, ttl in changes
+        ],
+    )
+
+
+# -------------------------------------------------------- golden bytes
+#: sha256 of the UPDATE messages (frame payloads, in order) that
+#: send_update emitted for GOLDEN_CHANGES before the codec moved into
+#: the package; the list spans two 64 KB chunks of 1850 and 250 changes.
+GOLDEN_SHA256 = "1af78141c5342fda4b21e3242affe3cab4998ebb3cb80699aa5efef8adbf0796"
+GOLDEN_CHANGES = [
+    (
+        ("IXFR_ADD", "AXFR", "IXFR_DELETE")[i % 3],
+        f"h{i}.golden.example.",
+        f"10.0.{i // 256 % 256}.{i % 256}",
+        60 + i % 7,
+    )
+    for i in range(2100)
+]
+
+
+def test_send_update_wire_bytes_golden():
+    server = LoopbackDnsServer(update_handler=lambda zone, changes: 0)
+    try:
+        send_update("127.0.0.1", server.port, 10.0, "golden.example.", GOLDEN_CHANGES)
+    finally:
+        server.close()
+    frames = [r["wire"] for r in server.requests]
+    assert [len(f) for f in frames] == [65522, 9032]
+    assert hashlib.sha256(b"".join(frames)).hexdigest() == GOLDEN_SHA256

@@ -30,7 +30,7 @@ import pytest
 PKG = Path(__file__).resolve().parent.parent / "spark_dns_spark"
 
 #: Module roots allowed inside function bodies.  Everything here is
-#: either pure-Python (stdlib, dnspython, this package), loaded by the
+#: either pure-Python (stdlib, this package), loaded by the
 #: harness long before any query runs (pyspark), or a native module
 #: that test_catalog_import_preloads_native_deps proves is already in
 #: sys.modules once the catalog is imported (pandas, numpy).
@@ -40,8 +40,8 @@ ALLOWED_ROOTS = {
     "shutil", "hashlib", "tempfile", "threading", "socket", "struct",
     "atexit", "contextlib", "itertools", "collections", "typing",
     "importlib", "functools", "random", "string", "datetime",
-    # pure-Python third-party / framework (loaded pre-query by harness)
-    "pyspark", "dns",
+    # framework (loaded pre-query by harness)
+    "pyspark",
     # package-internal
     "spark_dns_spark",
     # native, but PRELOADED at catalog import time (asserted below)

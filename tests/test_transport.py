@@ -1,12 +1,13 @@
-"""Transport-seam tests (VERDICT r2 item 7): the `dns` source's
-transfer semantics behind :class:`ZoneTransport`, verified for BOTH the
-file-store default and the dnspython-backed :class:`WireTransport`
-(wire injected — no dnspython / live server in this container).
+"""Transport-seam tests: the `dns` source's transfer semantics behind
+:class:`ZoneTransport`, verified for BOTH the file-store default and
+the TCP :class:`WireTransport`.
 
-The fake wire emulates a real server's answer streams (RFC 5936 AXFR /
-RFC 1995 IXFR record shapes) straight from a ZoneStore's state, so the
-equivalence tests prove: for the same zone history, WireTransport's
-parsed rows == FileStoreTransport's rows, transfer for transfer.
+The wire side talks to :class:`tests.dnswire.LoopbackDnsServer` serving
+the same :class:`ZoneStore` over 127.0.0.1 (RFC 5936 AXFR / RFC 1995
+IXFR answer shapes, split across messages), so the equivalence tests
+prove: for the same zone history, WireTransport's parsed rows ==
+FileStoreTransport's rows, transfer for transfer.  The pure
+answer-stream parser is tested without sockets.
 """
 
 from __future__ import annotations
@@ -24,6 +25,7 @@ from spark_dns_spark.sources.zonestore import (
     IXFR_DELETE,
     ZoneStore,
 )
+from tests.dnswire import LoopbackDnsServer
 
 ZONE = "example.org."
 
@@ -38,36 +40,6 @@ def _ns():
 
 def _a(fqdn: str, ip: str):
     return ("A", fqdn, ip, 0)
-
-
-def fake_wire(store: ZoneStore, zone: str):
-    """Answer streams a live server would send for this store's state."""
-
-    def wire(z: str, serial: int):
-        assert z == zone
-        d = store._load(zone)
-        cur = int(d["serial"])
-        if serial >= cur:
-            return [_soa(cur)]  # up-to-date: single SOA
-        base = int(d.get("base_serial", 0))
-        have = {int(h[0]) for h in d["history"]}
-        journal_ok = all(s in have for s in range(serial + 1, cur + 1))
-        if serial == 0 or serial < base or not journal_ok:
-            # AXFR-shaped: SOA, whole zone (incl. NS), SOA
-            body = [_a(f, ip) for f, ip in d["records"]]
-            return [_soa(cur), _ns(), *body, _soa(cur)]
-        # IXFR-shaped: SOA(cur), then per-version transitions
-        out = [_soa(cur)]
-        for s in range(serial + 1, cur + 1):
-            chg = [h for h in d["history"] if int(h[0]) == s]
-            out.append(_soa(s - 1))
-            out.extend(_a(h[2], h[3]) for h in chg if h[1] == IXFR_DELETE)
-            out.append(_soa(s))
-            out.extend(_a(h[2], h[3]) for h in chg if h[1] != IXFR_DELETE)
-        out.append(_soa(cur))
-        return out
-
-    return wire
 
 
 @pytest.fixture()
@@ -85,26 +57,28 @@ def store(tmp_path):
     return st
 
 
-def _transports(store):
-    file_t = FileStoreTransport(store.root)
-    wire_t = WireTransport(
-        "dns.example",
-        wire=fake_wire(store, ZONE),
-        serial_wire=lambda z: store.serial(z),
-    )
-    return file_t, wire_t
+@pytest.fixture()
+def transports(store):
+    server = LoopbackDnsServer.for_store(store)
+    try:
+        yield (
+            FileStoreTransport(store.root),
+            WireTransport("127.0.0.1", port=server.port, timeout=10.0),
+        )
+    finally:
+        server.close()
 
 
 # -- transport equivalence: same store state, same rows ---------------
 
 
-def test_serial_poll_matches(store):
-    file_t, wire_t = _transports(store)
+def test_serial_poll_matches(transports):
+    file_t, wire_t = transports
     assert file_t.serial(ZONE) == wire_t.serial(ZONE) == 5
 
 
-def test_axfr_full_snapshot_matches(store):
-    file_t, wire_t = _transports(store)
+def test_axfr_full_snapshot_matches(transports):
+    file_t, wire_t = transports
     f = file_t.transfer(ZONE, 0, None, axfr=True)
     w = wire_t.transfer(ZONE, 0, None, axfr=True)
     assert f.kind == w.kind == AXFR
@@ -115,8 +89,8 @@ def test_axfr_full_snapshot_matches(store):
     assert {r[1] for r in w.rows} == {"b.example.org.", "c.example.org."}
 
 
-def test_ixfr_delta_matches(store):
-    file_t, wire_t = _transports(store)
+def test_ixfr_delta_matches(transports):
+    file_t, wire_t = transports
     f = file_t.transfer(ZONE, 3, None, axfr=False)
     w = wire_t.transfer(ZONE, 3, None, axfr=False)
     assert f.serial == w.serial == 5
@@ -124,8 +98,8 @@ def test_ixfr_delta_matches(store):
     assert (IXFR_DELETE, "a.example.org.", "10.0.0.1") in w.rows
 
 
-def test_ixfr_bounded_matches(store):
-    file_t, wire_t = _transports(store)
+def test_ixfr_bounded_matches(transports):
+    file_t, wire_t = transports
     f = file_t.transfer(ZONE, 3, 4, axfr=False)
     w = wire_t.transfer(ZONE, 3, 4, axfr=False)
     assert f.serial == w.serial == 4
@@ -134,18 +108,18 @@ def test_ixfr_bounded_matches(store):
     ]
 
 
-def test_up_to_date_matches(store):
-    file_t, wire_t = _transports(store)
+def test_up_to_date_matches(transports):
+    file_t, wire_t = transports
     f = file_t.transfer(ZONE, 5, None, axfr=False)
     w = wire_t.transfer(ZONE, 5, None, axfr=False)
     assert f.rows == w.rows == []
     assert f.serial == w.serial == 5
 
 
-def test_serial0_ixfr_request_answers_full_zone(store):
+def test_serial0_ixfr_request_answers_full_zone(transports):
     # Xfr.java:43-46: serial==0 initial sync ⇒ AXFR result regardless
     # of the IXFR request type.
-    _, wire_t = _transports(store)
+    _, wire_t = transports
     w = wire_t.transfer(ZONE, 0, None, axfr=False)
     assert w.kind == AXFR
     assert all(r[0] == AXFR for r in w.rows)
@@ -239,14 +213,6 @@ def test_wire_serial0_delete_run_raises():
     t = WireTransport("dns.example", wire=wire)
     with pytest.raises(OSError, match="delete run in a serial-0"):
         t.transfer(ZONE, 0, None, axfr=True)
-
-
-def test_wire_transport_without_dnspython_raises():
-    t = WireTransport("dns.example")
-    with pytest.raises(OSError, match="dnspython"):
-        t.transfer(ZONE, 0, None, axfr=True)
-    with pytest.raises(OSError, match="dnspython"):
-        t.serial(ZONE)
 
 
 def test_make_transport_selects(tmp_path):

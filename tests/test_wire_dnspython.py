@@ -1,208 +1,41 @@
-"""WireTransport coverage BEYOND the injected parser (VERDICT r3 item
-7): exercise ``_dnspython_wire`` / ``_dnspython_serial`` themselves.
+"""``transport=wire`` over real sockets: :class:`WireTransport` against
+:class:`tests.dnswire.LoopbackDnsServer` on 127.0.0.1 — no DNS library
+and no network needed.
 
-Two layers:
-
-1. **API-shape fakes** (always run): a minimal ``dns`` package faked in
-   ``sys.modules`` with the exact attribute surface dnspython exposes
-   (``dns.query.xfr`` yielding messages of rrsets of rdatas,
-   ``dns.rdatatype`` constants, ``dns.message.make_query``).  These
-   tests execute the real adapter code — request construction
-   (IXFR+serial+port+timeout+relativize), message iteration, rdata
-   attribute access — not the injected ``wire=`` seam.
-2. **Loopback socket tests** (always run; no dnspython, no network):
-   a stdlib TCP/UDP server on 127.0.0.1 speaks length-prefixed RFC
-   1035/5936 wire format (tests/dnswire.py), and the ``dns`` surface
-   is a stdlib shim whose transport is REAL socket I/O — so the
-   adapter code runs end-to-end over genuine sockets.
+The server splits answers across messages (RFC 5936 §2) and keeps each
+connection open after answering, so every passing transfer proves the
+client folded the messages and stopped at the terminating SOA rather
+than at connection close.  The fault tests pin how a broken server
+surfaces: as ``OSError`` (suppressable by ``ignore-failures``), or as
+:class:`ZoneNotFoundError` for NOTAUTH.  Spark-level ``transport=wire``
+reads live in test_dns_source.py and test_dns_streaming.py.
 """
 
 from __future__ import annotations
 
-import sys
-import types
+import time
 
 import pytest
 
 from spark_dns_spark.sources.transport import WireTransport
-from spark_dns_spark.sources.zonestore import AXFR, IXFR_ADD, IXFR_DELETE
+from spark_dns_spark.sources.zonestore import (
+    AXFR,
+    IXFR_ADD,
+    IXFR_DELETE,
+    ZoneNotFoundError,
+)
+from tests.dnswire import LoopbackDnsServer, soa_rr
 
 ZONE = "ex4.example."
 
-_RDTYPE_TEXT = {251: "IXFR", 252: "AXFR", 6: "SOA", 1: "A", 2: "NS"}
-
-
-class _FakeRd:
-    """One rdata: SOA carries .serial; A carries .address."""
-
-    def __init__(self, rtype, value, serial=0):
-        self._text = value
-        if rtype == "SOA":
-            self.serial = serial
-        if rtype == "A":
-            self.address = value
-
-    def to_text(self):
-        return self._text
-
-
-class _FakeRRset(list):
-    def __init__(self, rtype, name, rds):
-        super().__init__(rds)
-        self.rdtype = {v: k for k, v in _RDTYPE_TEXT.items()}[rtype]
-        self.name = name
-
-
-class _FakeMessage:
-    def __init__(self, rrsets):
-        self.answer = rrsets
-
-
-def _install_fake_dns(monkeypatch, script, captured):
-    """Fake the dnspython module surface _dnspython_wire/_serial touch.
-
-    ``script(zone, serial)`` -> list[WireRR]; the fake yields each
-    record as its own single-rdata rrset across TWO messages (XFR
-    answers legitimately span messages — the adapter must fold them).
-    """
-    dns_mod = types.ModuleType("dns")
-    query_mod = types.ModuleType("dns.query")
-    rdatatype_mod = types.ModuleType("dns.rdatatype")
-    message_mod = types.ModuleType("dns.message")
-
-    rdatatype_mod.IXFR = 251
-    rdatatype_mod.AXFR = 252
-    rdatatype_mod.SOA = 6
-    rdatatype_mod.A = 1
-    rdatatype_mod.to_text = lambda v: _RDTYPE_TEXT[v]
-
-    def xfr(where, zone, rdtype=None, serial=None, port=None, timeout=None,
-            relativize=None, **kw):
-        captured.update(
-            where=where, zone=zone, rdtype=rdtype, serial=serial,
-            port=port, timeout=timeout, relativize=relativize,
-        )
-        rrs = script(zone, serial)
-        sets = [
-            _FakeRRset(rtype, name, [_FakeRd(rtype, value, soa_serial)])
-            for rtype, name, value, soa_serial in rrs
-        ]
-        mid = max(1, len(sets) // 2)
-        yield _FakeMessage(sets[:mid])
-        yield _FakeMessage(sets[mid:])
-
-    def make_query(zone, rdtype):
-        captured["soa_query"] = (zone, rdtype)
-        return ("query", zone, rdtype)
-
-    def udp(q, where, port=None, timeout=None):
-        captured.update(udp_where=where, udp_port=port, udp_timeout=timeout)
-        rd = _FakeRd("SOA", f"ns1.{ZONE} host.{ZONE} 77", serial=77)
-        return _FakeMessage([_FakeRRset("SOA", ZONE, [rd])])
-
-    query_mod.xfr = xfr
-    query_mod.udp = udp
-    message_mod.make_query = make_query
-    dns_mod.query = query_mod
-    dns_mod.rdatatype = rdatatype_mod
-    dns_mod.message = message_mod
-    for name, mod in [
-        ("dns", dns_mod), ("dns.query", query_mod),
-        ("dns.rdatatype", rdatatype_mod), ("dns.message", message_mod),
-    ]:
-        monkeypatch.setitem(sys.modules, name, mod)
-
-
-def _soa(serial):
-    return ("SOA", ZONE, f"ns1.{ZONE} host.{ZONE} {serial}", serial)
-
-
-def test_dnspython_adapter_axfr_request_and_fold(monkeypatch):
-    captured = {}
-
-    def script(zone, serial):
-        assert serial == 0
-        return [
-            _soa(5),
-            ("NS", ZONE, f"ns1.{ZONE}", 0),
-            ("A", f"a.{ZONE}", "10.0.0.1", 0),
-            ("A", f"b.{ZONE}", "10.0.0.2", 0),
-            _soa(5),
-        ]
-
-    _install_fake_dns(monkeypatch, script, captured)
-    t = WireTransport("dns.example", port=5353, timeout=2.5)
-    res = t.transfer(ZONE, 0, None, axfr=True)
-    # dnsjava-parity request (Xfr.java:37-50): IXFR rdtype, serial 0,
-    # port/timeout forwarded, absolute names
-    assert captured["rdtype"] == 251 and captured["serial"] == 0
-    assert captured["port"] == 5353 and captured["timeout"] == 2.5
-    assert captured["relativize"] is False
-    assert res.kind == AXFR and res.serial == 5
-    # NS filtered (P1); records folded across the two messages
-    assert res.rows == [
-        (AXFR, f"a.{ZONE}", "10.0.0.1"),
-        (AXFR, f"b.{ZONE}", "10.0.0.2"),
-    ]
-
-
-def test_dnspython_adapter_ixfr_deltas(monkeypatch):
-    captured = {}
-
-    def script(zone, serial):
-        assert serial == 3
-        return [
-            _soa(5),
-            _soa(3), ("A", f"old.{ZONE}", "10.0.0.9", 0),
-            _soa(4), ("A", f"new.{ZONE}", "10.0.0.10", 0),
-            _soa(4), _soa(5), ("A", f"fin.{ZONE}", "10.0.0.11", 0),
-            _soa(5),
-        ]
-
-    _install_fake_dns(monkeypatch, script, captured)
-    t = WireTransport("dns.example")
-    res = t.transfer(ZONE, 3, 5, axfr=False)
-    assert res.kind == "IXFR" and res.serial == 5
-    assert res.rows == [
-        (IXFR_DELETE, f"old.{ZONE}", "10.0.0.9"),
-        (IXFR_ADD, f"new.{ZONE}", "10.0.0.10"),
-        (IXFR_ADD, f"fin.{ZONE}", "10.0.0.11"),
-    ]
-
-
-def test_dnspython_serial_poll(monkeypatch):
-    captured = {}
-    _install_fake_dns(monkeypatch, lambda z, s: [], captured)
-    t = WireTransport("dns.example", port=10053, timeout=1.5)
-    assert t.serial(ZONE) == 77
-    assert captured["soa_query"][0] == ZONE
-    assert captured["udp_port"] == 10053 and captured["udp_timeout"] == 1.5
-
-
-# ------------------------------------------------------ loopback sockets
-# Full stack over REAL sockets, no dnspython and no network needed
-# (VERDICT r6 item 5 — this was the suite's single skip): a stdlib
-# 127.0.0.1 server speaks RFC 1035 §4.2.2 two-byte length framing with
-# answers split across multiple messages (RFC 5936 §2), and the ``dns``
-# module surface is a stdlib shim whose transport is genuine TCP/UDP
-# (tests/dnswire.py) — so _dnspython_wire/_dnspython_serial run their
-# real adapter code end-to-end over the wire format.
-
-
-def _soa_rr(serial):
-    return ("SOA", ZONE, f"ns1.{ZONE} host.{ZONE} {serial} 1 1 1 1", serial)
-
 
 @pytest.fixture()
-def wire_env(monkeypatch):
-    from tests.dnswire import LoopbackDnsServer, install_socket_shim
-
+def serve():
     servers = []
 
-    def start(script, soa_serial=0, split=2):
-        srv = LoopbackDnsServer(script, soa_serial=soa_serial, split=split)
+    def start(*args, **kw):
+        srv = LoopbackDnsServer(*args, **kw)
         servers.append(srv)
-        install_socket_shim(monkeypatch)
         return srv
 
     yield start
@@ -210,19 +43,23 @@ def wire_env(monkeypatch):
         srv.close()
 
 
-def test_wire_axfr_over_loopback_tcp(wire_env):
-    def script(zone, serial):
-        return [
-            _soa_rr(5),
-            ("NS", zone, f"ns1.{zone}", 0),
-            ("A", f"a.{zone}", "10.0.0.1", 0),
-            ("A", f"b.{zone}", "10.0.0.2", 0),
-            _soa_rr(5),
-        ]
+def _axfr_script(zone, serial):
+    return [
+        soa_rr(zone, 5),
+        ("NS", zone, f"ns1.{zone}", 0),
+        ("A", f"a.{zone}", "10.0.0.1", 0),
+        ("A", f"b.{zone}", "10.0.0.2", 0),
+        soa_rr(zone, 5),
+    ]
 
-    srv = wire_env(script, split=3)
-    t = WireTransport("127.0.0.1", port=srv.port, timeout=5.0)
-    res = t.transfer(ZONE, 0, None, axfr=True)
+
+def _transport(srv, timeout=5.0):
+    return WireTransport("127.0.0.1", port=srv.port, timeout=timeout)
+
+
+def test_wire_axfr_over_loopback_tcp(serve):
+    srv = serve(_axfr_script, split=3)
+    res = _transport(srv).transfer(ZONE, 0, None, axfr=True)
     # request went over the wire as IXFR-with-serial-0 (dnsjava parity)
     assert srv.requests[0] == {"qname": ZONE, "qtype": "IXFR", "serial": 0}
     assert res.kind == AXFR and res.serial == 5
@@ -233,20 +70,21 @@ def test_wire_axfr_over_loopback_tcp(wire_env):
     ]
 
 
-def test_wire_ixfr_deltas_over_loopback_tcp(wire_env):
+def test_wire_ixfr_deltas_over_loopback_tcp(serve):
     def script(zone, serial):
         assert serial == 3  # client's serial arrived in authority SOA
         return [
-            _soa_rr(5),
-            _soa_rr(3), ("A", f"old.{ZONE}", "10.0.0.9", 0),
-            _soa_rr(4), ("A", f"new.{ZONE}", "10.0.0.10", 0),
-            _soa_rr(4), _soa_rr(5), ("A", f"fin.{ZONE}", "10.0.0.11", 0),
-            _soa_rr(5),
+            soa_rr(zone, 5),
+            soa_rr(zone, 3), ("A", f"old.{zone}", "10.0.0.9", 0),
+            soa_rr(zone, 4), ("A", f"new.{zone}", "10.0.0.10", 0),
+            soa_rr(zone, 4), soa_rr(zone, 5), ("A", f"fin.{zone}", "10.0.0.11", 0),
+            soa_rr(zone, 5),
         ]
 
-    srv = wire_env(script, split=4)
-    t = WireTransport("127.0.0.1", port=srv.port, timeout=5.0)
-    res = t.transfer(ZONE, 3, 5, axfr=False)
+    # one record per message: SOA(5) closes a delimiter pair mid-stream
+    # before the real terminator arrives
+    srv = serve(script, split=9)
+    res = _transport(srv).transfer(ZONE, 3, 5, axfr=False)
     assert srv.requests[0] == {"qname": ZONE, "qtype": "IXFR", "serial": 3}
     assert res.kind == "IXFR" and res.serial == 5
     assert res.rows == [
@@ -256,24 +94,54 @@ def test_wire_ixfr_deltas_over_loopback_tcp(wire_env):
     ]
 
 
-def test_wire_serial_poll_over_loopback_udp(wire_env):
-    srv = wire_env(lambda z, s: [], soa_serial=77)
-    t = WireTransport("127.0.0.1", port=srv.port, timeout=5.0)
-    assert t.serial(ZONE) == 77
-    assert srv.requests[0]["qtype"] == "SOA"
-    assert srv.requests[0]["proto"] == "udp"
+def test_wire_serial_poll_over_loopback_tcp(serve):
+    srv = serve(serial=lambda zone: 77)
+    assert _transport(srv).serial(ZONE) == 77
+    assert srv.requests == [{"qname": ZONE, "qtype": "SOA"}]
 
 
-def test_wire_truncated_stream_raises_over_loopback(wire_env):
-    # server drops the trailing SOA terminator — the RFC 1995/5936
-    # terminator check must reject the partial stream, over real TCP
-    def script(zone, serial):
-        return [
-            _soa_rr(5),
-            ("A", f"a.{ZONE}", "10.0.0.1", 0),
-        ]
-
-    srv = wire_env(script)
-    t = WireTransport("127.0.0.1", port=srv.port, timeout=5.0)
+def test_wire_truncated_stream_raises_over_loopback(serve):
+    # server drops the trailing SOA terminator and hangs up — the
+    # partial stream must not pass as a smaller zone
+    srv = serve(lambda z, s: [soa_rr(z, 5), ("A", f"a.{z}", "10.0.0.1", 0)],
+                fault="hangup")
     with pytest.raises(OSError, match="terminator|truncated"):
+        _transport(srv).transfer(ZONE, 0, None, axfr=True)
+
+
+# ------------------------------------------------------ fault injection
+@pytest.mark.parametrize(
+    "fault, match",
+    [
+        ("bad-id", "id mismatch"),
+        ("short-frame", "truncated"),
+        ("undecodable", "undecodable"),
+        ("silent", "timed out"),  # the timeout option reaches the socket
+    ],
+)
+def test_wire_faulty_reply_raises_oserror(serve, fault, match):
+    srv = serve(_axfr_script, serial=lambda zone: 5, fault=fault)
+    t = _transport(srv, timeout=1.0)
+    with pytest.raises(OSError, match=match):
         t.transfer(ZONE, 0, None, axfr=True)
+    with pytest.raises(OSError, match=match):
+        t.serial(ZONE)
+
+
+def test_wire_serial_poll_notauth_raises_zone_not_found(serve):
+    # transfers answered NOTAUTH: test_dns_source's wire notauth matrix
+    def unknown(zone):
+        raise ZoneNotFoundError(zone)
+
+    with pytest.raises(ZoneNotFoundError, match="not authoritative"):
+        _transport(serve(serial=unknown)).serial(ZONE)
+
+
+def test_wire_transfer_ends_at_terminator_not_close(serve):
+    # the server keeps the connection open after a complete answer:
+    # the transfer must return long before the 30 s timeout
+    srv = serve(_axfr_script)
+    t0 = time.monotonic()
+    res = _transport(srv, timeout=30.0).transfer(ZONE, 0, None, axfr=True)
+    assert time.monotonic() - t0 < 5.0
+    assert len(res.rows) == 2
