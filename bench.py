@@ -28,7 +28,11 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from spark_dns_spark.session import get_session, release_all_caches  # noqa: E402
+from spark_dns_spark.session import (  # noqa: E402
+    get_session,
+    local_cpus,
+    release_all_caches,
+)
 
 #: Headline set: the flagship change-log pipeline + the shuffle-heavy
 #: relational queries + (as they land) the north-star pipeline ops.
@@ -265,7 +269,7 @@ def main() -> None:
     # per-query map (the r15 failure mode).  The final stdout line
     # below stays a compact summary (<1.5 KB) the driver can always
     # parse.
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "").strip() or "default"
+    cpus = local_cpus()
     detail = {
         "metric": "headline_queries_total",
         "value": round(sum(timings.values()), 3),

@@ -119,15 +119,6 @@ def dot_sql(a: str, b: str) -> str:
     )
 
 
-def dist2_sql(a: str, b: str) -> str:
-    """DuckDB squared L2 distance, same elementwise form as the Spark
-    ``zip_with((x-y)*(x-y))`` fold."""
-    return (
-        f"list_aggregate(list_transform(generate_series(1, len({a})), "
-        f"i -> ({a}[i]-{b}[i])*({a}[i]-{b}[i])), 'sum')"
-    )
-
-
 def norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
 
@@ -164,14 +155,6 @@ def _plane_dot(v: Column, pattern: str) -> Column:
     """dot(v, ±1 plane): multiply by exact ±1.0 literals, index-order sum."""
     signs = F.array(*[F.lit(1.0 if c == "+" else -1.0) for c in pattern])
     return dot(v, signs)
-
-
-def _plane_dot_sql(v: str, pattern: str) -> str:
-    return (
-        f"list_aggregate(list_transform(generate_series(1, len({v})), "
-        f"i -> CASE WHEN substr('{pattern}', i, 1) = '+' THEN {v}[i] "
-        f"ELSE -{v}[i] END), 'sum')"
-    )
 
 
 def band_signatures(
@@ -237,13 +220,6 @@ def dot_arrow(a: Column, b: Column) -> Column:
         return pd.Series(acc)
 
     return _dot(a, b)
-
-
-def cosine_with_norms_arrow(
-    a: Column, b: Column, na: Column, nb: Column
-) -> Column:
-    """Arrow-batched :func:`cosine_with_norms` (same fold contract)."""
-    return dot_arrow(a, b) / (na * nb)
 
 
 def band_signatures_arrow(
@@ -458,17 +434,3 @@ def attach_cosine(
         )
         .drop("_va", "_vb", "_na", "_nb")
     )
-
-
-def band_signatures_sql(
-    v: str, planes: list[str], rows_per_band: int
-) -> list[str]:
-    out = []
-    for b in range(0, len(planes), rows_per_band):
-        bits = " || ".join(
-            f"CASE WHEN {_plane_dot_sql(v, planes[b + r])} > 0 "
-            f"THEN '1' ELSE '0' END"
-            for r in range(rows_per_band)
-        )
-        out.append(f"'{b // rows_per_band}:' || {bits} AS band{b // rows_per_band}")
-    return out

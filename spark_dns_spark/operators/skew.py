@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from spark_dns_spark.functions.dnsfn import portable_hash32, portable_hash32_sql
+from spark_dns_spark.functions.dnsfn import portable_hash32
 
 DEFAULT_SALTS = 16
 
@@ -30,10 +30,6 @@ DEFAULT_SALTS = 16
 def salt_of(c: Column | str, n_salts: int = DEFAULT_SALTS) -> Column:
     """Deterministic salt bucket from a high-cardinality column."""
     return portable_hash32(c) % n_salts
-
-
-def salt_of_sql(expr: str, n_salts: int = DEFAULT_SALTS) -> str:
-    return f"{portable_hash32_sql(expr)} % {n_salts}"
 
 
 def salted_count(

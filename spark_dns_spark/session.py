@@ -12,6 +12,16 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: Local core count when ``SPARK_GRAFT_CPUS`` is unset.
+DEFAULT_CPUS = "32"
+
+
+def local_cpus() -> str:
+    """``SPARK_GRAFT_CPUS`` or :data:`DEFAULT_CPUS`: the core count of a
+    local session and of its shuffle parallelism."""
+    return os.environ.get("SPARK_GRAFT_CPUS", "").strip() or DEFAULT_CPUS
+
+
 #: Session-level (runtime-settable) confs every query path wants.  These
 #: are safe to re-apply on a session we did not create (the driver's):
 #: all are ``spark.sql.*`` runtime confs, not JVM-startup confs.
@@ -50,7 +60,7 @@ def tune(spark: SparkSession) -> SparkSession:
     # (AQE coalesces down again). On a real cluster this would be set
     # to ~2-3x total cores via submit conf instead.
     try:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = int(local_cpus())
         spark.conf.set("spark.sql.shuffle.partitions", str(cpus))
     except Exception:
         pass
@@ -90,7 +100,7 @@ def release_all_caches(spark: SparkSession) -> int:
 
 def get_session(app_name: str = "spark_dns_spark") -> SparkSession:
     """Build (or fetch) a local session for tests/bench."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = local_cpus()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)

@@ -54,7 +54,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from spark_dns_spark.sources.options import XFR_AXFR, DnsSourceOptions
+from spark_dns_spark.sources.options import XFR_AXFR, DnsSourceOptions, OptionError
 from spark_dns_spark.sources.transport import make_transport
 from spark_dns_spark.sources.zonestore import ZoneNotFoundError
 
@@ -218,11 +218,18 @@ class DnsStreamReader(DataSourceStreamReader):
 
     def __init__(self, options: dict):
         self.opts = DnsSourceOptions.parse(options)
-        self.progress = ProgressLog(
-            options.get("progress-dir")
-            or os.path.join(self.opts.store, ".progress"),
-            self.opts.max_kept_commits,
-        )
+        progress_dir = options.get("progress-dir")
+        if not progress_dir:
+            if self.opts.transport == "wire":
+                # `store` names the server here, not a directory: the
+                # default would land in <host>/.progress relative to
+                # whatever directory the worker runs in.
+                raise OptionError(
+                    "transport=wire streaming requires the 'progress-dir' "
+                    "option: 'store' names a server, not a directory"
+                )
+            progress_dir = os.path.join(self.opts.store, ".progress")
+        self.progress = ProgressLog(progress_dir, self.opts.max_kept_commits)
         # admission-control clock: the last offsets handed to the
         # engine (lazily seeded from initialOffset so restart recovery
         # and the `serial` option apply identically)

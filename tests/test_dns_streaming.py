@@ -14,7 +14,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from spark_dns_spark.sources import register_all
-from spark_dns_spark.sources.dns_source import ProgressLog
+from spark_dns_spark.sources.dns_source import DnsStreamReader, ProgressLog
+from spark_dns_spark.sources.options import OptionError
 from spark_dns_spark.sources.zonestore import ZoneStore
 from tests.dnswire import LoopbackDnsServer
 
@@ -114,6 +115,19 @@ def test_stream_sees_only_delta_not_snapshot(spark, store, tmp_path):
         spark.read.parquet(out).filter(F.col("fqdn") == "d1.example.acme.").collect()
     )
     assert len(new_rows) == 1 and new_rows[0].action == "IXFR_ADD"
+
+
+def test_stream_over_wire_requires_progress_dir(tmp_path, monkeypatch):
+    """transport=wire: `store` names a host, so the default
+    <store>/.progress would be a directory named after the host,
+    relative to the worker's cwd — the reader refuses instead."""
+    monkeypatch.chdir(tmp_path)
+    wire = {"store": "127.0.0.1", "transport": "wire", "zones": "example.acme."}
+    with pytest.raises(OptionError, match="progress-dir"):
+        DnsStreamReader(wire)
+    progress = str(tmp_path / "progress")
+    assert DnsStreamReader({**wire, "progress-dir": progress}).progress.path == progress
+    assert not (tmp_path / "127.0.0.1").exists()
 
 
 def test_stream_over_wire_offsets_from_tcp_soa_poll(spark, store, tmp_path):

@@ -75,9 +75,9 @@ def test_window_streaming_entries_pinned():
     # against a 1500 s budget leaves 10x headroom.  This test pins the
     # exception to EXACTLY these four — any further streaming creep
     # into the window must revisit the cap deliberately.
-    from spark_dns_spark.plans.catalog import catalog
+    from spark_dns_spark.plans.catalog import DRIVER_WINDOW_N, catalog
 
-    window = list(catalog().values())[:50]
+    window = list(catalog().values())[:DRIVER_WINDOW_N]
     # the connector's stream roundtrip is reference-core (S7/S10) and
     # always stays; the pin applies to the LLM-pipeline streaming tier
     streaming = sorted(

@@ -9,11 +9,18 @@ attach_cosine strategies stay bit-identical.
 
 from __future__ import annotations
 
+import shutil
+import sys
+import threading
+from concurrent.futures import ThreadPoolExecutor
+
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from spark_dns_spark.operators import similarity as sim
 from spark_dns_spark.plans import q_similarity as qs
+from spark_dns_spark.session import release_all_caches
 
 pytestmark = pytest.mark.usefixtures("spark")
 
@@ -50,6 +57,55 @@ def test_vectors_memo_same_frame_and_count(spark, sf_dir):
     b = qs._vectors(spark, sf_dir)
     assert a is b
     assert a._corpus_rows == a.count()
+
+
+def test_vectors_memo_evicts_and_unpersists_stale_frame(spark, sf_dir, tmp_path):
+    """A changed embeddings fingerprint evicts the old frame AND drops
+    its cached blocks before the new frame registers: the new frame
+    reads the new rows instead of the stale cache entry its identical
+    plan would otherwise match."""
+    corpus = pq.read_table(f"{sf_dir}/embeddings.parquet")
+    path = str(tmp_path / "embeddings.parquet")
+    pq.write_table(corpus, path)
+    release_all_caches(spark)
+    jsc = spark.sparkContext._jsc
+    old = qs._vectors(spark, str(tmp_path))
+    assert old.count() == corpus.num_rows
+    assert jsc.getPersistentRDDs().size() == 1  # the materialized frame
+    pq.write_table(corpus.slice(0, 100), path)  # new size => new fingerprint
+    new = qs._vectors(spark, str(tmp_path))
+    assert new is not old
+    assert jsc.getPersistentRDDs().size() == 0  # evicted frame unpersisted
+    scope = [k for k in qs._VECTORS_MEMO if k[1] == str(tmp_path)]
+    assert len(scope) == 1 and qs._VECTORS_MEMO[scope[0]] is new
+    assert new.count() == 100
+    release_all_caches(spark)
+
+
+def test_vectors_memo_concurrent_callers_share_one_frame(spark, sf_dir, tmp_path):
+    """Racing cold callers (more threads than cores) all get the ONE
+    memoized frame: a caller that loses the race serves the winner's
+    frame instead of returning a second, unmemoized one."""
+    shutil.copy(f"{sf_dir}/embeddings.parquet", tmp_path / "embeddings.parquet")
+    workers = 8
+    start = threading.Barrier(workers)
+
+    def call():
+        start.wait(timeout=60)
+        return qs._vectors(spark, str(tmp_path))
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(workers) as pool:
+            futures = [pool.submit(call) for _ in range(workers)]
+            frames = [f.result(timeout=300) for f in futures]
+    finally:
+        sys.setswitchinterval(interval)
+    assert all(f is frames[0] for f in frames)
+    scope = [k for k in qs._VECTORS_MEMO if k[1] == str(tmp_path)]
+    assert len(scope) == 1 and qs._VECTORS_MEMO[scope[0]] is frames[0]
+    release_all_caches(spark)
 
 
 def test_attach_strategies_bit_identical(spark, sf_dir):

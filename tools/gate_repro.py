@@ -86,6 +86,7 @@ def child_main(sf_dir: str, n: int, out_path: str,
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as entrymod  # noqa: E402 (repo-root import)
+    from spark_dns_spark.session import local_cpus
     from tools.check_oracle import (  # reuse the exact comparator
         TABLES,
         _pandas_rows,
@@ -93,7 +94,7 @@ def child_main(sf_dir: str, n: int, out_path: str,
         table_hash,
     )
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = local_cpus()
     # deliberately untuned — what an external harness would build
     spark = SparkSession.builder.master(f"local[{cpus}]").getOrCreate()
 

@@ -36,9 +36,9 @@ def main() -> int:
 
     from pyspark.sql import SparkSession, functions as F
 
-    from spark_dns_spark.session import RUNTIME_CONF, release_all_caches
+    from spark_dns_spark.session import RUNTIME_CONF, local_cpus, release_all_caches
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = local_cpus()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("profile_query")
